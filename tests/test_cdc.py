@@ -19,6 +19,18 @@ def _rand_bytes(n, seed):
 
 
 class TestChunkPayload:
+    def test_gear_table_digest_pinned(self):
+        """The seeded gear table is part of the chunk-boundary contract:
+        any change to how it is drawn moves every CDC boundary."""
+        import hashlib
+
+        from webcrawl_spark.operators.cdc import _gear_table
+
+        table = _gear_table()
+        assert table.dtype.name == "uint64" and table.shape == (256,)
+        assert hashlib.sha256(table.astype("<u8").tobytes()).hexdigest() == \
+            "5376225423c07a44e6078a818f3f835da59c09dc8b0a012e79ffc7f61fa10198"
+
     def test_chunks_cover_payload_exactly(self):
         data = _rand_bytes(5000, 1)
         chunks = chunk_payload(data)

@@ -9,6 +9,7 @@ from webcrawl_spark.frontier.cuckoo import (
     CuckooShard,
     buckets_for,
     shard_from_bytes,
+    update_blob,
 )
 
 RNG = np.random.default_rng(99)
@@ -81,6 +82,36 @@ class TestCuckoo:
         shard = CuckooShard(buckets_for(100))
         assert shard.contains(np.zeros(0, dtype=np.uint64)).shape == (0,)
         assert not shard.contains(_keys(50)).any()
+
+
+class TestUpdateBlob:
+    """update_blob is the one shard-update kernel of both round executors
+    (the distributed cogroup merge and the driver's local update)."""
+
+    @pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+    def test_fresh_then_incremental(self, kind):
+        from webcrawl_spark.frontier.bloom import bits_for, optimal_k
+        from webcrawl_spark.frontier.crawl import EngineConfig
+
+        eng = EngineConfig(seen_filter=kind, bloom_keys_per_shard=2000)
+        first = _keys(500, seed=3).astype(np.int64)
+        more = _keys(500, seed=4).astype(np.int64)
+        blob = update_blob(None, first, eng)
+        # a fresh shard is sized from the engine's per-shard key budget
+        if kind == "cuckoo":
+            fresh = CuckooShard(buckets_for(2000))
+        else:
+            m = bits_for(2000, eng.bloom_fp_rate)
+            fresh = BloomShard(m, optimal_k(m, 2000))
+        fresh.add(first.astype(np.uint64))
+        assert blob == fresh.to_bytes()
+        # an existing blob keeps its kind and gains the new keys
+        grown = shard_from_bytes(update_blob(blob, more, eng))
+        assert isinstance(grown, type(fresh))
+        assert grown.contains(first.astype(np.uint64)).all()
+        assert grown.contains(more.astype(np.uint64)).all()
+        # no hashes: the blob round-trips unchanged
+        assert update_blob(blob, np.zeros(0, dtype=np.int64), eng) == blob
 
 
 class TestCrawlParity:

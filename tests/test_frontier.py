@@ -653,23 +653,44 @@ class TestKeysCompaction:
 
 
 class TestDriverFastTailParity:
-    def test_driver_tail_matches_distributed_state(self, spark, site, fetch,
-                                                   site_pages_df, tmp_path):
-        """The small-round driver tail (classify + exact seen check +
-        admission replay + shard update on the driver) must leave
-        byte-equivalent crawl STATE to the fully distributed stages:
-        identical fetch order, frontier rows (urls, canon, buckets,
-        priorities, seqs), and per-round metrics. small_round_threshold=1
-        forces every round down the distributed path; the default routes
-        these small rounds through the driver tail."""
+    @pytest.mark.parametrize("seen_filter", ["bloom", "cuckoo"])
+    @pytest.mark.parametrize("limit", [None, 20])
+    def test_driver_tail_matches_distributed_state(
+            self, spark, site, fetch, site_pages_df, tmp_path, monkeypatch,
+            limit, seen_filter):
+        """The two round-tail executors must leave identical crawl STATE:
+        fetch order, frontier rows (urls, canon, buckets, priorities,
+        seqs) and per-round metrics. The default engine runs these small
+        rounds on the driver executor; small_round_threshold=1 sends every
+        round with candidates to the distributed executor. Limit crawls
+        must also match the oracle's fetch order."""
+        calls = {"driver": 0, "distributed": 0}
+
+        def counted(name, fn):
+            def wrapper(self, *a, **kw):
+                calls[name] += 1
+                return fn(self, *a, **kw)
+            return wrapper
+
+        monkeypatch.setattr(SparkCrawl, "_driver_round_tail", counted(
+            "driver", SparkCrawl._driver_round_tail))
+        monkeypatch.setattr(SparkCrawl, "_distributed_round_tail", counted(
+            "distributed", SparkCrawl._distributed_round_tail))
+
         seed = f"https://{site.hosts[0]}/"
-        cfg = CrawlConfig(seed_url=seed, limit=None, max_depth=2,
+        cfg = CrawlConfig(seed_url=seed, limit=limit, max_depth=2,
                           allow_backward_crawling=True, host_budget=4)
         drv = run_engine(spark, site_pages_df, cfg, tmp_path / "drv",
-                         EngineConfig())
+                         EngineConfig(seen_filter=seen_filter))
+        assert calls["driver"] > 0 and calls["distributed"] == 0
+        calls["driver"] = 0
         dist = run_engine(spark, site_pages_df, cfg, tmp_path / "dist",
-                          EngineConfig(small_round_threshold=1))
+                          EngineConfig(seen_filter=seen_filter,
+                                       small_round_threshold=1))
+        assert calls["distributed"] > 0
         assert drv.fetch_order() == dist.fetch_order()
+        if limit is not None:
+            assert drv.fetch_order() == round_crawl(fetch, cfg).fetch_order
         cols = ["url", "url_canon", "host", "host_bucket", "depth",
                 "priority", "seq"]
         f_drv = sorted(tuple(r[c] for c in cols)
@@ -811,6 +832,30 @@ def test_write_admitted_empty_round(spark, tmp_path):
     empty = pd.DataFrame([], columns=cols)
     df = spark.createDataFrame(empty, FRONTIER_SCHEMA)
     assert df.count() == 0 and "seq" in df.columns
+
+
+def test_read_local_round_trips_append_local(tmp_path):
+    """TableIO.read_local is append_local's read twin: partition
+    directories come back as integer columns, and a round written with no
+    rows reads as an empty frame."""
+    import pandas as pd
+
+    from webcrawl_spark.sources.tableio import TableIO
+
+    io = TableIO(None, str(tmp_path))
+    pdf = pd.DataFrame({"host_bucket": [2, 0, 2], "blob": [b"a", b"b", b"c"]}
+                       ).astype({"host_bucket": "int32"})
+    io.append_local(pdf, "flat", 1)
+    io.append_local(pdf, "parted", 1, partition_by=["host_bucket"])
+    io.append_local(pdf.iloc[:0], "flat", 2)
+    for table in ("flat", "parted"):
+        got = io.read_local(table, 1, columns=["host_bucket", "blob"])
+        assert str(got["host_bucket"].dtype) == "int32"
+        assert sorted(zip(got["host_bucket"], got["blob"])) == \
+            sorted(zip(pdf["host_bucket"], pdf["blob"]))
+    assert len(io.read_local("flat", 2, columns=["blob"])) == 0
+    with pytest.raises(FileNotFoundError):
+        io.read_local("flat", 3)
 
 
 def test_extract_markdown_off(spark, tmp_path):

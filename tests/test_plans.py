@@ -337,3 +337,46 @@ def test_passage_removal_text_never_shuffles(spark):
     import re
     for m in re.finditer(r"Exchange hashpartitioning\(([^)]*)\)", plan):
         assert "text" not in m.group(1)
+
+
+# Spark jobs of rounds 1 and 2 of the crawl below (driver executor,
+# parquet backend, unlimited crawl) as measured before the round tail
+# became one pipeline: the ceiling for the driver tail's fixed cost.
+_DRIVER_ROUND_JOBS = [13, 15]
+
+
+def test_driver_round_job_count(spark, tmp_path):
+    """Every small round runs on the driver executor, whose job count is
+    pinned: an unlimited round and a limit round alike may launch no more
+    Spark jobs than _DRIVER_ROUND_JOBS. A TableIO read that quietly
+    becomes a Spark job fails this. Each round runs under its own job
+    group, read back from the status tracker."""
+    from webcrawl_spark.datagen import build_site, render_page_html
+    from webcrawl_spark.frontier.crawl import SparkCrawl
+    from webcrawl_spark.frontier.oracle import CrawlConfig
+
+    sc = spark.sparkContext
+    site = build_site(seed=7, n_hosts=3, pages_per_host=30, n_hot_hosts=1,
+                      hot_factor=2)
+    pages = spark.createDataFrame(
+        [(u, render_page_html(site, u).encode()) for u in site.urls()],
+        "url string, html binary")
+    try:
+        for limit in (None, 20):
+            cfg = CrawlConfig(seed_url=f"https://{site.hosts[0]}/",
+                              limit=limit, max_depth=2,
+                              allow_backward_crawling=True, host_budget=4)
+            work = str(tmp_path / f"jobs_{limit}")
+            SparkCrawl(spark, pages, cfg, work).run(max_rounds=1)  # seed
+            counts = []
+            for rnd in (1, 2):
+                group = f"plan_round_jobs_{limit}_{rnd}"
+                sc.setJobGroup(group, group)
+                SparkCrawl(spark, pages, cfg, work).run(max_rounds=1)
+                counts.append(
+                    len(sc.statusTracker().getJobIdsForGroup(group)))
+            assert all(c <= cap for c, cap in
+                       zip(counts, _DRIVER_ROUND_JOBS)), (limit, counts)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)

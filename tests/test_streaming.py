@@ -211,6 +211,23 @@ class TestStreamCurate:
             else:
                 assert abs(s - b) <= 1, (i, s, b)
 
+    def test_max_vocab_warns_only_when_truncated(self, spark):
+        """A vocabulary of exactly max_vocab tokens loses nothing and stays
+        silent; one more distinct token than the cap warns."""
+        import warnings
+
+        from webcrawl_spark.streaming import stream_curate
+
+        docs = spark.createDataFrame([(1, "a b c")], "doc_id int, text string")
+        lm = spark.createDataFrame([("a", 3), ("b", 2), ("c", 1)],
+                                   "token string, cnt long")
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            stream_curate(docs, lm=lm, max_vocab=3)
+        assert not [w for w in caught if "max_vocab" in str(w.message)]
+        with pytest.warns(UserWarning, match="exceeds max_vocab"):
+            stream_curate(docs, lm=lm, max_vocab=2)
+
     def test_without_lm_flags_only(self, spark, tmp_path):
         from webcrawl_spark.streaming import stream_curate
 

@@ -43,16 +43,29 @@ same way (one frontier file per bucket per round), so every
 ``frontier_keys`` snapshot (one file per bucket; ≙ Iceberg
 rewrite_data_files) and tasks read snapshot + post-snapshot deltas.
 
-Bloom shard lifecycle (all executor-side):
-- build/update: cogroup(previous shard blobs, this round's new url-hashes)
-  by host_bucket → applyInPandas merge → append to the bloom_shards table.
-  No driver collect, no global broadcast; each task touches one bucket.
+Round tail: ONE pipeline after extraction — classify (F1) → exact seen
+check → first-occurrence admission (the reference's per-page ``limit``
+budget on limit crawls) → frontier write → seen-filter shard update — run
+by one of TWO executors, chosen on the round's candidate-link count alone:
+- driver (candidates < small_round_threshold): one Spark job collects the
+  round's links; the same kernels run in-process and append_local writes
+  the frontier rows and shard blobs. Limit or not, either TableIO backend.
+- distributed (the rest — the 10^10 path): pinned classify UDF → bucket-
+  local cogroup probe → unlimited crawls admit with a first-occurrence
+  window + native dense seqs; limit crawls (≤10k, types.ts:86) collect a
+  per-page-trimmed candidate set into the driver's replay function.
+
+Seen-filter (Bloom/cuckoo) shards, one blob per host_bucket:
+- build/update: one update_blob kernel (frontier/cuckoo.py) — applied in a
+  cogroup(previous blobs, new url-hashes) by host_bucket on distributed
+  rounds, on the blobs read back with TableIO.read_local on driver rounds.
 - probe: cogroup(candidates by cand_bucket, shard blobs by host_bucket) →
   vectorized numpy membership per bucket, then an EXACT bucket-local check:
   maybe-seen candidates are verified in the same task against the bucket's
   own frontier key files (column-pruned pyarrow read — ≙ an Iceberg
   storage-partitioned join). No round ever shuffles the frontier key
-  column; buckets that probe all-new skip the read.
+  column; buckets that probe all-new skip the read. Driver rounds read the
+  same per-bucket key files.
 - resume: read the latest committed bloom_shards round — no rebuild scan of
   the frontier.
 
@@ -61,10 +74,9 @@ Scale posture:
   URLs co-locate (politeness windows and shard probes shuffle within
   buckets); AQE skew handling backs up the explicit budget top-k.
 - the `html` binary column never enters a shuffle (project early).
-- the reference's global `limit` (≤10k, types.ts:86) keeps its sequential
-  cross-page admission semantics via a driver-side replay over the (small,
-  limit-bounded) candidate set; unlimited crawls (the 10^10 path) use the
-  fully distributed admission pipeline.
+- above small_round_threshold candidate links (not fetches: 5k link-heavy
+  pages can carry 10^6) only a limit crawl's trimmed candidates reach the
+  driver.
 
 Ordering contract (W1): fetch order equals the in-memory oracle
 (frontier/oracle.py round_crawl; ≡ the reference BFS FIFO when budget is
@@ -76,6 +88,7 @@ from __future__ import annotations
 
 import os
 import time
+from collections import Counter
 
 import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
@@ -83,14 +96,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from ..functions import CLASSIFY_SCHEMA, canonicalize_url, url_depth, url_host
-from ..kernels.classify import classify_link, _build_robot, _compile_patterns
+from ..functions import (canonicalize_url, classify_links_udf, url_depth,
+                         url_host)
+from ..kernels.classify import link_classifier
 from ..kernels.crawl import page_links
 from ..kernels.scrape import markdown_for_page
 from ..kernels import urlkit
 from ..sources.iceberg_io import make_tableio
-from .bloom import BloomShard, bits_for, optimal_k
-from .cuckoo import CuckooShard, buckets_for, shard_from_bytes
+from ..sources.tableio import round_entries
+from .cuckoo import shard_from_bytes, update_blob
 from .oracle import CrawlConfig
 
 __all__ = ["SparkCrawl", "EngineConfig"]
@@ -144,9 +158,9 @@ class EngineConfig:
         self.bloom_fp_rate = bloom_fp_rate
         self.max_rounds = max_rounds
         self.extract_markdown = extract_markdown
-        # rounds with fewer CANDIDATE LINKS than this use the driver-side
-        # admission path even without a limit (identical result, none of the
-        # distributed-dedup fixed cost); big rounds stay fully distributed.
+        # rounds with fewer CANDIDATE LINKS than this run the round tail on
+        # the driver executor (identical result, none of the distributed
+        # stages' fixed cost); bigger rounds run the distributed executor.
         # Gated on the candidate count, not the fetch count — 5k link-heavy
         # pages can carry 10^6 candidates, which must never hit the driver.
         self.small_round_threshold = small_round_threshold
@@ -173,26 +187,6 @@ class EngineConfig:
         # Complements the classify-time robots gate (cfg.enforce_robots,
         # reference parity) for crawls whose robots aren't known up front.
         self.live_robots = live_robots
-
-
-def _classify_f1_udf(cfg: CrawlConfig):
-    """F1 predicate chain without limit (link) → struct."""
-    opts = cfg.filter_options()
-
-    def batch(links: pd.Series) -> pd.DataFrame:
-        base = urlkit.parse_url(opts.base_url)
-        initial = urlkit.parse_url(opts.initial_url)
-        excludes = _compile_patterns(opts.excludes)
-        includes = _compile_patterns(opts.includes)
-        robot = _build_robot(opts)
-        rows = [
-            classify_link(link or "", opts, _base=base, _initial=initial,
-                          _excludes=excludes, _includes=includes, _robot=robot)
-            for link in links
-        ]
-        return pd.DataFrame(rows, columns=["allowed", "url", "denial_reason"])
-
-    return pandas_udf(batch, CLASSIFY_SCHEMA)
 
 
 def _unsafe_host_udf():
@@ -296,13 +290,7 @@ def _bucket_seen_keys(frontier_dir: str, bucket: int, committed: int,
                 f"round={keys_round}", f"host_bucket={bucket}",
                 "*.parquet")))
         floor = keys_round if keys_round is not None else -1
-        for rdir in _glob.glob(os.path.join(frontier_dir, "round=*")):
-            try:
-                rnd = int(os.path.basename(rdir).split("=", 1)[1])
-            except ValueError:
-                continue
-            if rnd > committed or rnd <= floor:
-                continue
+        for _, rdir in round_entries(frontier_dir, floor, committed):
             paths.extend(_glob.glob(os.path.join(
                 rdir, f"host_bucket={bucket}", "*.parquet")))
     if not paths:
@@ -610,17 +598,11 @@ class SparkCrawl:
         # too, and with NO snapshot the seen-check falls back to the
         # per-round files — slower, never wrong (frontier round files are
         # never deleted).
-        import glob as _glob
         import shutil as _shutil
 
-        for rdir in _glob.glob(os.path.join(
-                self.io._table_dir("frontier_keys"), "round=*")):
-            try:
-                rnd = int(os.path.basename(rdir).split("=", 1)[1])
-            except ValueError:
-                continue
-            if rnd < round_no:
-                _shutil.rmtree(rdir, ignore_errors=True)
+        for _, rdir in self.io._rounds("frontier_keys",
+                                       upto_round=round_no - 1):
+            _shutil.rmtree(rdir, ignore_errors=True)
 
     def _load_state(self) -> None:
         committed = self.io.committed_round()
@@ -647,18 +629,10 @@ class SparkCrawl:
         Iceberg rewrite-deletes maintenance pass); version-gated by
         _load_state, so it never runs on checkpoints written by this
         engine version."""
-        import os as _os
-
         seq_dir = self.io._table_dir("fetched_seqs")
-        res_dir = self.io._table_dir("crawl_result")
-        if not _os.path.isdir(res_dir):
-            return
-        for entry in _os.listdir(res_dir):
-            if not entry.startswith("round="):
-                continue
-            rnd = int(entry.split("=", 1)[1])
-            if rnd > committed or _os.path.isdir(
-                    _os.path.join(seq_dir, entry)):
+        for rnd, path in self.io._rounds("crawl_result",
+                                         upto_round=committed):
+            if os.path.isdir(os.path.join(seq_dir, os.path.basename(path))):
                 continue
             try:
                 rows = self.io.read_round("crawl_result", rnd)
@@ -746,7 +720,7 @@ class SparkCrawl:
 
     def _priority_of_batch(self, urls) -> "Callable[[str], int]":
         """Driver-side twin of cfg.priority_of for the bounded replay
-        paths (seeds / small rounds / limit replay). In table mode the
+        paths (seeds, _replay_admission). In table mode the
         levels for just the batch's hosts are fetched via one semi-join
         collect — O(distinct hosts in batch) rows, never the whole
         table."""
@@ -798,10 +772,6 @@ class SparkCrawl:
         return base
 
     # --- bloom shards (file-backed, executor-side lifecycle) --------------
-    def _shard_params(self) -> tuple[int, int]:
-        m = bits_for(self.engine.bloom_keys_per_shard, self.engine.bloom_fp_rate)
-        return m, optimal_k(m, self.engine.bloom_keys_per_shard)
-
     def _shards_df(self) -> DataFrame | None:
         """Latest committed shard set (host_bucket, blob), or None."""
         latest = self.io.latest_round("bloom_shards")
@@ -843,11 +813,7 @@ class SparkCrawl:
         re-serializes. The north rule's 'one filter shard per host-hash
         partition' with the treeAggregate merge replaced by the cheaper
         per-bucket incremental update (a global merge never materializes)."""
-        import numpy as np
-
-        m_bits, k = self._shard_params()
-        filter_kind = self.engine.seen_filter
-        cuckoo_nb = buckets_for(self.engine.bloom_keys_per_shard)
+        eng = self.engine
         n_parts = self._cogroup_parts(n_rows)
         dedup = self._dedup_col()
         # pre-partition both cogroup inputs to a row-count-sized task count
@@ -865,16 +831,10 @@ class SparkCrawl:
         shards = shards.repartition(n_parts, "host_bucket")
 
         def merge(key, old: pd.DataFrame, new: pd.DataFrame) -> pd.DataFrame:
-            if len(old):
-                shard = shard_from_bytes(bytes(old["blob"].iloc[0]))
-            elif filter_kind == "cuckoo":
-                shard = CuckooShard(cuckoo_nb)
-            else:
-                shard = BloomShard(m_bits, k)
-            if len(new):
-                shard.add(new["dedup_hash"].to_numpy().astype(np.uint64))
+            blob = update_blob(bytes(old["blob"].iloc[0]) if len(old) else None,
+                               new["dedup_hash"].to_numpy(), eng)
             return pd.DataFrame({"host_bucket": [int(key[0])],
-                                 "blob": [shard.to_bytes()]})
+                                 "blob": [blob]})
 
         updated = (
             shards.groupBy("host_bucket")
@@ -882,6 +842,27 @@ class SparkCrawl:
             .applyInPandas(merge, "host_bucket int, blob binary")
         )
         self.io.append(updated, "bloom_shards", round_no)
+
+    def _seen_key_reader(self):
+        """``read(bucket)`` → that bucket's committed frontier dedup keys
+        (_bucket_seen_keys), as a closure over plain values only, so
+        _bloom_probe's tasks and the driver executor read the same files.
+        The latest committed key snapshot replaces the per-round files it
+        covers (see _maybe_compact_keys); TableIO.bucket_files supplies the
+        backend's committed per-bucket file list, or None to glob."""
+        io = self.io
+        committed = io.committed_round()
+        key_col = self._dedup_col()
+        cache_key, files = io.bucket_files("frontier", committed)
+        keys_round = io.latest_round("frontier_keys", committed)
+
+        def read(bucket: int):
+            return _bucket_seen_keys(
+                cache_key, bucket, committed, key_col,
+                paths=None if files is None else files.get(bucket, []),
+                keys_round=keys_round)
+
+        return read
 
     def _bloom_probe(self, allowed: DataFrame, shards: DataFrame,
                      n_rows: int) -> DataFrame:
@@ -904,18 +885,7 @@ class SparkCrawl:
         storage-partitioned-join scan."""
         import numpy as np
 
-        committed = self.io.committed_round()
-        key_col = self._dedup_col()
-        if self.io.kind == "parquet":
-            frontier_dir = self.io._table_dir("frontier")
-            files_map = None          # tasks glob their bucket's round dirs
-            # latest committed key-snapshot: tasks read it instead of the
-            # per-round files it covers (see _maybe_compact_keys)
-            keys_round = self.io.latest_round("frontier_keys", committed)
-        else:
-            frontier_dir = f"{self.io.root}#frontier"   # cache key only
-            files_map = self.io.bucket_data_files("frontier", committed)
-            keys_round = None   # Iceberg compaction ≙ rewrite_data_files
+        seen_keys = self._seen_key_reader()
 
         def probe(key, cand: pd.DataFrame, shard: pd.DataFrame) -> pd.DataFrame:
             if not len(cand):
@@ -933,13 +903,7 @@ class SparkCrawl:
             if not maybe.any():
                 out["is_seen"] = False
                 return out
-            bucket = int(key[0])
-            seen = _bucket_seen_keys(
-                frontier_dir, bucket, committed, key_col,
-                paths=None if files_map is None
-                else files_map.get(bucket, []),
-                keys_round=keys_round,
-            )
+            seen = seen_keys(int(key[0]))
             # arrow-native membership: the C++ kernel builds the hash set
             # from the key column directly — candidate keys and bucket keys
             # never materialize as Python objects
@@ -1298,7 +1262,7 @@ class SparkCrawl:
         ).withColumn("round", F.lit(round_no))
         # candidate count observed ON the write job (was a separate
         # count over the pinned classified candidates): gates the
-        # small-round paths with zero extra passes
+        # round-tail executor choice with zero extra passes
         obs_cand = Observation(f"cand_{round_no}")
         combined = combined.observe(
             obs_cand,
@@ -1306,7 +1270,6 @@ class SparkCrawl:
         io.append(combined, "crawl_result", round_no)
         n_candidates = int(obs_cand.get["n_cand"])
         t = self._trace(round_no, "fetch+extract write", t)
-        combined_file = io.read_round("crawl_result", round_no)
         # fetched-seq sidecar (≙ an Iceberg equality-delete file): one tiny
         # file per round so the queued view's anti-join never re-opens the
         # wide crawl_result files (one per extraction task per round).
@@ -1350,102 +1313,39 @@ class SparkCrawl:
         t = self._trace(round_no, "token update", t)
 
         # ---- admission (F1) + seen check + frontier write ----
-        # Small-round DRIVER tail (the _write_admitted/_admit_small_round
-        # precedent, extended to the whole post-extract chain): when the
-        # candidate count is bounded, classification, the exact bucket-
-        # local seen check, the admission replay, and the shard update run
-        # on the driver against the SAME kernels and committed files the
-        # distributed stages use — one Spark job (the link collect)
-        # instead of four python-stage jobs of pure fixed cost. Bit-parity
-        # by construction: the pandas UDFs are thin wrappers over these
-        # exact python kernels, and the Bloom prefilter has no false
-        # negatives, so prefilter+exact-read ≡ the driver's exact read.
-        drv = None
-        shard_table_exists = (eng.use_bloom
-                              and io.latest_round("bloom_shards") is not None)
-        driver_fast = (limit is None and io.kind == "parquet"
-                       and n_candidates < eng.small_round_threshold)
-        if driver_fast:
-            n_new, drv = self._driver_round_tail(
-                round_no, update_shards=shard_table_exists)
-            t = self._trace(round_no, "driver classify+admit", t)
-            cls = flagged = shards = None
+        # One pipeline, two executors, chosen on the candidate count alone
+        # (see the module docstring). Below the threshold the driver runs
+        # the whole tail in-process — one Spark job (the link collect)
+        # instead of the classify, probe and shard-merge python stages.
+        shards_exist = (eng.use_bloom
+                        and io.latest_round("bloom_shards") is not None)
+        if n_candidates < eng.small_round_threshold:
+            n_new, drv = self._driver_round_tail(round_no)
+            cls = shards = None
         else:
-            cand = combined_file.select(
-                F.col("priority").alias("source_priority"),
-                F.col("seq").alias("source_seq"),
-                F.posexplode("links").alias("link_pos", "link"),
-            )
-            cls = self._pin(
-                cand.withColumn("c", _classify_f1_udf(cfg)(F.col("link")))
-            )
-            t = self._trace(round_no, "classify pin", t)
-            allowed = (
-                cls.filter(F.col("c.allowed"))
-                .select("source_priority", "source_seq", "link_pos", "link")
-                .withColumn("url_canon", canonicalize_url(F.col("link")))
-            )
-            dedup = self._dedup_col()
-            dedup_col = (F.col("link") if dedup == "url"
-                         else F.col("url_canon"))
-            allowed = (
-                allowed.withColumn("dedup_key", dedup_col)
-                .withColumn("dedup_hash", F.xxhash64("dedup_key"))
-                .withColumn(
-                    "cand_bucket",
-                    F.pmod(F.xxhash64(url_host(F.col("link"))),
-                           F.lit(eng.num_buckets)).cast("int"),
-                )
-            )
-
-            # ---- seen-set check (bucket-local, no frontier shuffle) ----
-            # Bloom path: ONE cogroup stage computes exact is_seen — shard
-            # membership prefilter + per-bucket exact key read, all
-            # task-local (see _bloom_probe). The frontier never enters a
-            # shuffle here. No-bloom path (reference-parity/testing mode):
-            # classic exact left join against the frontier key column.
-            shards = self._shards_df() if eng.use_bloom else None
-            if shards is not None:
-                flagged = self._pin(
-                    self._bloom_probe(allowed, shards, n_rows=n_candidates))
-                t = self._trace(round_no, "seen-check probe pin", t)
-            else:
-                frontier_keys = self._frontier_df().select(
-                    F.col(dedup).alias("seen_key"))
-                flagged = allowed.join(
-                    frontier_keys.withColumn("is_seen_j", F.lit(True)),
-                    allowed["dedup_key"] == F.col("seen_key"), "left",
-                ).withColumn(
-                    "is_seen", F.coalesce(F.col("is_seen_j"), F.lit(False))
-                ).drop("is_seen_j", "seen_key")
-
-            # ---- admission + new frontier rows ----
-            if limit is not None:
-                n_new = self._admit_with_limit_replay(flagged, limit,
-                                                      round_no)
-            elif n_candidates < eng.small_round_threshold:
-                n_new = self._admit_small_round(flagged, round_no)
-            else:
-                n_new = self._admit_distributed(flagged, round_no)
-            t = self._trace(round_no, "admission+frontier write", t)
+            cls, shards, n_new = self._distributed_round_tail(
+                round_no, n_candidates)
+            drv = None
+        t = self._trace(round_no, "classify+seen check+admission", t)
 
         new_rows_file = (io.read_round("frontier", round_no)
                          if n_new else None)
-        if eng.use_bloom and not (driver_fast and shard_table_exists):
-            if not shard_table_exists:
-                # bootstrap: the shard table doesn't cover the committed
-                # frontier (resume of a pre-bloom checkpoint, or a crawl
-                # started with use_bloom=False) — seeding from only this
-                # round's rows would mark older frontier URLs 'surely new'
-                # and re-admit duplicates. Build from the FULL committed
-                # frontier plus this round's admissions instead.
-                base = self._frontier_df()
-                if n_new:
-                    base = base.unionByName(
-                        new_rows_file.select(*base.columns))
-                self._write_shards(base, None, round_no,
-                                   n_rows=self._frontier_count + n_new)
-            elif n_new:
+        if eng.use_bloom and not shards_exist:
+            # bootstrap: the shard table doesn't cover the committed
+            # frontier (resume of a pre-bloom checkpoint, or a crawl
+            # started with use_bloom=False) — seeding from only this
+            # round's rows would mark older frontier URLs 'surely new'
+            # and re-admit duplicates. Build from the FULL committed
+            # frontier plus this round's admissions instead.
+            base = self._frontier_df()
+            if n_new:
+                base = base.unionByName(new_rows_file.select(*base.columns))
+            self._write_shards(base, None, round_no,
+                               n_rows=self._frontier_count + n_new)
+        elif eng.use_bloom and n_new:
+            if drv is not None:
+                self._update_shards_local(drv["new_hashes"], round_no)
+            else:
                 self._write_shards(new_rows_file, shards, round_no,
                                    n_rows=n_new)
         t = self._trace(round_no, "bloom shard write", t)
@@ -1455,7 +1355,7 @@ class SparkCrawl:
 
         # ---- per-round metrics + per-bucket lineage ----
         # Metric groups already known on the driver (small selections, the
-        # driver-fast tail) are filled directly; any remaining distributed
+        # driver executor) are filled directly; any remaining distributed
         # groups run as ONE unioned agg + collect (parallel stages of a
         # single job — the round's fixed cost is job-count-bound). A fully
         # driver-resident round runs no metrics job at all.
@@ -1469,7 +1369,7 @@ class SparkCrawl:
         if drv is not None:
             grouped["denial"] = drv["denials"]
             grouped["bucket_new"] = {
-                str(k): v for k, v in drv["bucket_new"].items()}
+                b: len(h) for b, h in drv["new_hashes"].items()}
         else:
             stats = _union(stats, cls.filter(~F.col("c.allowed"))
                            .groupBy(F.lit("denial").alias("kind"),
@@ -1481,11 +1381,8 @@ class SparkCrawl:
                     F.col("host_bucket").cast("string").alias("key"),
                 ).count())
         if sel_rows is not None:
-            fetched: dict[str, int] = {}
-            for r in sel_rows:
-                k = str(r["host_bucket"])
-                fetched[k] = fetched.get(k, 0) + 1
-            grouped["bucket_fetched"] = fetched
+            grouped["bucket_fetched"] = Counter(
+                r["host_bucket"] for r in sel_rows)
         else:
             stats = _union(stats, selected.groupBy(
                 F.lit("bucket_fetched").alias("kind"),
@@ -1493,23 +1390,20 @@ class SparkCrawl:
             ).count())
         if stats is not None:
             for r in stats.collect():
-                grouped[r["kind"]][r["key"]] = r["count"]
-        denials = grouped["denial"]
-        bucket_counts = {int(k): v for k, v in grouped["bucket_new"].items()}
-        fetched_buckets = {int(k): v
-                           for k, v in grouped["bucket_fetched"].items()}
+                key = r["key"] if r["kind"] == "denial" else int(r["key"])
+                grouped[r["kind"]][key] = r["count"]
+
+        def by_bucket(kind: str) -> dict[str, int]:
+            return {str(k): v for k, v in sorted(grouped[kind].items())}
+
         t = self._trace(round_no, "metrics agg", t)
         io.append_json(
             {
                 "round": round_no, "fetched": n_selected, "new_urls": n_new,
                 "processed": self._processed + n_selected,
-                "denials": {k: denials[k] for k in sorted(denials)},
-                "bucket_new_counts": {
-                    str(k): v for k, v in sorted(bucket_counts.items())
-                },
-                "bucket_fetched_counts": {
-                    str(k): v for k, v in sorted(fetched_buckets.items())
-                },
+                "denials": dict(sorted(grouped["denial"].items())),
+                "bucket_new_counts": by_bucket("bucket_new"),
+                "bucket_fetched_counts": by_bucket("bucket_fetched"),
             },
             "round_metrics", round_no,
         )
@@ -1520,6 +1414,77 @@ class SparkCrawl:
         self._frontier_count += n_new
         self._commit(round_no, done=False)
         return True
+
+    def _distributed_round_tail(self, round_no: int, n_candidates: int):
+        """The round tail as Spark stages (candidates ≥
+        small_round_threshold): pinned classify UDF → seen check → an
+        unlimited crawl's distributed admission, or a limit crawl's
+        per-page-trimmed collect into _replay_admission. Returns (the
+        pinned classified links, the shard set probed, n_new)."""
+        cfg, eng = self.cfg, self.engine
+        cand = self.io.read_round("crawl_result", round_no).select(
+            F.col("priority").alias("source_priority"),
+            F.col("seq").alias("source_seq"),
+            F.posexplode("links").alias("link_pos", "link"),
+        )
+        t = time.perf_counter()
+        cls = self._pin(cand.withColumn(
+            "c", classify_links_udf(cfg.filter_options())(F.col("link"))))
+        t = self._trace(round_no, "  distributed: classify pin", t)
+        dedup = self._dedup_col()
+        allowed = (
+            cls.filter(F.col("c.allowed"))
+            .select("source_priority", "source_seq", "link_pos", "link")
+            .withColumn("url_canon", canonicalize_url(F.col("link")))
+            .withColumn("dedup_key", F.col("link" if dedup == "url"
+                                           else "url_canon"))
+            .withColumn("dedup_hash", F.xxhash64("dedup_key"))
+            .withColumn(
+                "cand_bucket",
+                F.pmod(F.xxhash64(url_host(F.col("link"))),
+                       F.lit(eng.num_buckets)).cast("int"))
+        )
+
+        # ---- seen-set check (bucket-local, no frontier shuffle) ----
+        # Bloom path: ONE cogroup stage computes exact is_seen — shard
+        # membership prefilter + per-bucket exact key read, all task-local
+        # (see _bloom_probe). No-bloom path (reference-parity/testing
+        # mode): classic exact left join against the frontier key column.
+        shards = self._shards_df() if eng.use_bloom else None
+        if shards is not None:
+            flagged = self._pin(
+                self._bloom_probe(allowed, shards, n_rows=n_candidates))
+            self._trace(round_no, "  distributed: seen-check probe pin", t)
+        else:
+            frontier_keys = self._frontier_df().select(
+                F.col(dedup).alias("seen_key"))
+            flagged = allowed.join(
+                frontier_keys.withColumn("is_seen_j", F.lit(True)),
+                allowed["dedup_key"] == F.col("seen_key"), "left",
+            ).withColumn(
+                "is_seen", F.coalesce(F.col("is_seen_j"), F.lit(False))
+            ).drop("is_seen_j", "seen_key")
+
+        if cfg.limit is None:
+            return cls, shards, self._admit_distributed(flagged, round_no)
+        # Collect trim: only each page's first (limit − frontier_count)
+        # links can ever be accepted — the page budget never exceeds that
+        # — so later rows are dropped before the collect (a link-heavy
+        # round collects O(pages × cap), not every classified link). Seen
+        # rows within the window stay: accepted dups consume the budget.
+        cap = cfg.limit - self._frontier_count
+        rows = []
+        if cap > 0:
+            w_page = Window.partitionBy("source_priority", "source_seq") \
+                           .orderBy("link_pos")
+            rows = (
+                flagged.withColumn("_pn", F.row_number().over(w_page))
+                .filter(F.col("_pn") <= cap)
+                .orderBy("source_priority", "source_seq", "link_pos")
+                .select("source_seq", "link", "url_canon", "dedup_key",
+                        "is_seen", "cand_bucket").collect()
+            )
+        return cls, shards, len(self._replay_admission(rows, round_no))
 
     def _admit_distributed(self, flagged: DataFrame, round_no: int) -> int:
         """Unlimited-crawl admission, fully distributed: first-occurrence
@@ -1564,246 +1529,120 @@ class SparkCrawl:
         io.append(new_rows, "frontier", round_no, partition_by=["host_bucket"])
         return int(obs.get["n_new"])
 
-    def _admit_small_round(self, flagged: DataFrame, round_no: int) -> int:
-        """Unlimited-crawl admission for small rounds, on the driver:
-        first-occurrence-wins over (source_priority, source_seq, link_pos) —
-        bitwise-identical to the distributed path, without its per-round
-        fixed cost."""
-        t = time.perf_counter()
-        rows = (
-            flagged.filter(~F.col("is_seen"))
-            .select("source_priority", "source_seq", "link_pos", "link",
-                    "url_canon", "dedup_key")
-            .orderBy("source_priority", "source_seq", "link_pos").collect()
-        )
-        t = self._trace(round_no, "  small: flagged collect", t)
-        pr = self._priority_of_batch([r["link"] for r in rows])
-        seen: set[str] = set()
-        admitted: list[tuple] = []
-        seq = self._next_seq
-        for r in rows:
-            if r["dedup_key"] in seen:
-                continue
-            seen.add(r["dedup_key"])
-            link = r["link"]
-            admitted.append((
-                link, r["url_canon"], urlkit.url_host(link), 0,
-                urlkit.get_url_depth(urlkit.url_path(link)),
-                pr(link), round_no, seq,
-            ))
-            seq += 1
-        t = self._trace(round_no, "  small: replay", t)
-        self._write_admitted(admitted, round_no)
-        self._trace(round_no, "  small: write", t)
-        return len(admitted)
+    def _driver_round_tail(self, round_no: int) -> tuple[int, dict]:
+        """The round tail on the driver (candidates <
+        small_round_threshold), against the SAME kernels and committed
+        files as the distributed executor, so parity holds by construction:
+        link_classifier is what the classify UDF wraps, walked in
+        (source_priority, source_seq, link_pos) order; the seen check is
+        _bloom_probe's exact per-bucket key read (_seen_key_reader — the
+        filter has no false negatives, so prefilter + exact ≡ exact);
+        admission is _replay_admission; buckets and key hashes come from
+        the python xxhash64 twin (bit-parity gated in tests).
 
-    def _driver_round_tail(self, round_no: int,
-                           update_shards: bool) -> tuple[int, dict]:
-        """Driver-side classify → exact seen check → admission replay →
-        frontier + shard writes for small rounds (gate: candidate count <
-        small_round_threshold, parquet backend, no limit). One Spark job
-        (the link collect) replaces the classify python stage, the probe
-        cogroup, the flagged collect, and the shard-merge cogroup — four
-        jobs of pure per-round fixed cost at this size. Semantics are the
-        distributed path's by construction:
-
-        - classification calls the SAME classify_link kernel the pandas
-          UDF wraps, walking links in the (source_priority, source_seq,
-          link_pos) order the small-round replay already used;
-        - the seen check is the same committed per-bucket key read
-          (_bucket_seen_keys: snapshot + deltas, driver process keeps the
-          same incremental cache) _bloom_probe's tasks do — the Bloom
-          prefilter has no false negatives, so prefilter+exact ≡ exact;
-        - the admission replay is _admit_small_round's loop verbatim, and
-          the frontier write is the existing append_local path;
-        - the shard update adds the same xxhash64 key hashes to the same
-          deserialized blobs the cogroup merge would (python xxh64 twin,
-          bit-parity gated in tests).
-
-        Returns (n_new, {"denials": {...}, "bucket_new": {...}}) — the
-        metric groups the distributed stats job would have aggregated.
-        """
+        Returns (n_new, {"denials", "new_hashes"}): the denial counts the
+        distributed stats job would aggregate, and the admitted keys'
+        hashes per bucket for _update_shards_local and the bucket counts."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
         from ..kernels.xxh64 import spark_bucket, xxhash64
 
-        cfg, eng, io = self.cfg, self.engine, self.io
-        rows = (io.read_round("crawl_result", round_no)
+        eng = self.engine
+        rows = (self.io.read_round("crawl_result", round_no)
                 .select("priority", "seq", "links")
                 .filter(F.size("links") > 0).collect())
-        opts = cfg.filter_options()
-        base = urlkit.parse_url(opts.base_url)
-        initial = urlkit.parse_url(opts.initial_url)
-        excludes = _compile_patterns(opts.excludes)
-        includes = _compile_patterns(opts.includes)
-        robot = _build_robot(opts)
+        classify = link_classifier(self.cfg.filter_options())
         use_url_key = eng.dedup_key == "url"
         denials: dict[str, int] = {}
-        flagged: list[tuple] = []   # (link, url_canon, dedup_key, bucket)
+        # [source_seq, link, url_canon, dedup_key, is_seen, bucket]
+        cands: list[list] = []
         for r in sorted(rows, key=lambda r: (r["priority"], r["seq"])):
             for link in r["links"]:
-                ok, _url, reason = classify_link(
-                    link or "", opts, _base=base, _initial=initial,
-                    _excludes=excludes, _includes=includes, _robot=robot)
+                ok, _url, reason = classify(link)
                 if not ok:
                     denials[reason] = denials.get(reason, 0) + 1
                     continue
                 canon = urlkit.canonicalize_url(link) if link else ""
-                key = link if use_url_key else canon
                 bucket = spark_bucket(
                     urlkit.url_host(link) if link else "", eng.num_buckets)
-                flagged.append((link, canon, key, bucket))
-        t = time.perf_counter()
-        committed = io.committed_round()
-        key_col = self._dedup_col()
-        frontier_dir = io._table_dir("frontier")
-        keys_round = io.latest_round("frontier_keys", committed)
-        by_bucket: dict[int, list[int]] = {}
-        for i, f in enumerate(flagged):
-            by_bucket.setdefault(f[3], []).append(i)
-        is_seen = [False] * len(flagged)
-        for b, idxs in by_bucket.items():
-            seen = _bucket_seen_keys(frontier_dir, b, committed, key_col,
-                                     keys_round=keys_round)
+                cands.append([r["seq"], link, canon,
+                              link if use_url_key else canon, False, bucket])
+        seen_keys = self._seen_key_reader()
+        by_bucket: dict[int, list[list]] = {}
+        for c in cands:
+            by_bucket.setdefault(c[5], []).append(c)
+        for b, group in by_bucket.items():
+            seen = seen_keys(b)
             if len(seen) == 0:
                 continue
-            hits = pc.is_in(
-                pa.array([flagged[i][2] for i in idxs], type=pa.string()),
-                value_set=seen).to_pylist()
-            for i, h in zip(idxs, hits):
-                is_seen[i] = bool(h)
-        t = self._trace(round_no, "  driver: seen check", t)
-        pr = self._priority_of_batch([f[0] for f in flagged])
-        round_new: set[str] = set()
-        admitted: list[tuple] = []
+            hits = pc.is_in(pa.array([c[3] for c in group], type=pa.string()),
+                            value_set=seen).to_pylist()
+            for c, h in zip(group, hits):
+                c[4] = bool(h)
         new_hashes: dict[int, list[int]] = {}
-        bucket_new: dict[int, int] = {}
-        seq = self._next_seq
-        for f, seen_f in zip(flagged, is_seen):
-            link, canon, key, bucket = f
-            if seen_f or key in round_new:
+        admitted = self._replay_admission(cands, round_no)
+        for key, b in admitted:
+            new_hashes.setdefault(b, []).append(xxhash64(key))
+        return len(admitted), {"denials": denials, "new_hashes": new_hashes}
+
+    def _update_shards_local(self, new_hashes: dict[int, list[int]],
+                             round_no: int) -> None:
+        """The driver executor's shard update: the latest committed blobs
+        (TableIO.read_local), update_blob on each bucket with new keys, all
+        blobs rewritten as this round's (host_bucket, blob) rows — the same
+        table contents _write_shards' cogroup writes."""
+        io = self.io
+        old = io.read_local("bloom_shards", io.latest_round("bloom_shards"),
+                            columns=["host_bucket", "blob"])
+        blobs = {int(b): bytes(x) for b, x in zip(old["host_bucket"],
+                                                   old["blob"])}
+        for b, hashes in new_hashes.items():
+            blobs[b] = update_blob(blobs.get(b), hashes, self.engine)
+        pdf = pd.DataFrame(
+            {"host_bucket": sorted(blobs),
+             "blob": [blobs[b] for b in sorted(blobs)]}).astype(
+            {"host_bucket": "int32"})
+        io.append_local(pdf, "bloom_shards", round_no,
+                        schema="host_bucket int, blob binary")
+
+    def _replay_admission(self, rows, round_no: int) -> list[tuple[str, int]]:
+        """First-occurrence admission over a round's allowed candidates
+        ``(source_seq, link, url_canon, dedup_key, is_seen, bucket)`` in
+        (source_priority, source_seq, link_pos) order; writes the admitted
+        frontier rows (seqs assigned inline) and returns their
+        (dedup_key, bucket) pairs. Limit crawls keep the reference's
+        sequential cross-page semantics (crawlService.ts:57-66 +
+        crawler.rs:267-269): per source page, accepted links — dups
+        included — consume the page's (limit − frontier size) budget, and
+        only unseen ones join the frontier."""
+        limit = self.cfg.limit
+        pr = self._priority_of_batch([r[1] for r in rows])
+        admitted: list[tuple] = []
+        round_new: dict[str, int] = {}      # admitted key → bucket
+        page, used, budget = None, 0, 0
+        for src, link, canon, key, seen, bucket in rows:
+            if limit is not None:
+                if src != page:
+                    page, used = src, 0
+                    budget = limit - self._frontier_count - len(admitted)
+                if used >= budget:
+                    continue
+                used += 1
+            if seen or key in round_new:
                 continue
-            round_new.add(key)
+            round_new[key] = bucket
             admitted.append((
                 link, canon, urlkit.url_host(link), 0,
                 urlkit.get_url_depth(urlkit.url_path(link)),
-                pr(link), round_no, seq,
+                pr(link), round_no, self._next_seq + len(admitted),
             ))
-            seq += 1
-            new_hashes.setdefault(bucket, []).append(xxhash64(key))
-            bucket_new[bucket] = bucket_new.get(bucket, 0) + 1
         self._write_admitted(admitted, round_no)
-        if update_shards and admitted:
-            self._driver_update_shards(new_hashes, round_no)
-        self._trace(round_no, "  driver: admit+writes", t)
-        return len(admitted), {"denials": denials, "bucket_new": bucket_new}
-
-    def _driver_update_shards(self, new_hashes: dict[int, list[int]],
-                              round_no: int) -> None:
-        """Driver twin of _write_shards' cogroup merge for small rounds:
-        deserializes the same latest-round blobs, adds the same key
-        hashes, writes the identical (host_bucket, blob) table layout via
-        append_local. Bloom bit-OR is insertion-order-independent; the
-        probe's exactness never depends on the filter either way (it only
-        prefilters the exact per-bucket key read)."""
-        import glob as _glob
-
-        import numpy as np
-        import pyarrow.parquet as pq
-
-        io, eng = self.io, self.engine
-        m_bits, k = self._shard_params()
-        latest = io.latest_round("bloom_shards")
-        blobs: dict[int, bytes] = {}
-        if latest is not None:
-            paths = _glob.glob(os.path.join(
-                io._table_dir("bloom_shards"), f"round={latest}",
-                "*.parquet"))
-            if paths:
-                tbl = pq.read_table(paths, columns=["host_bucket", "blob"])
-                for b, blob in zip(tbl.column(0).to_pylist(),
-                                   tbl.column(1).to_pylist()):
-                    blobs[int(b)] = bytes(blob)
-        out = dict(blobs)
-        cuckoo_nb = buckets_for(eng.bloom_keys_per_shard)
-        for b, hashes in new_hashes.items():
-            if b in blobs:
-                shard = shard_from_bytes(blobs[b])
-            elif eng.seen_filter == "cuckoo":
-                shard = CuckooShard(cuckoo_nb)
-            else:
-                shard = BloomShard(m_bits, k)
-            shard.add(np.array(hashes, dtype=np.int64).astype(np.uint64))
-            out[b] = shard.to_bytes()
-        pdf = pd.DataFrame(
-            {"host_bucket": sorted(out),
-             "blob": [out[b] for b in sorted(out)]}).astype(
-            {"host_bucket": "int32"})
-        io.append_local(pdf, "bloom_shards", round_no)
-
-    def _admit_with_limit_replay(
-        self, flagged: DataFrame, limit: int, round_no: int,
-    ) -> int:
-        """Sequential cross-page admission semantics (crawlService.ts:57-66 +
-        crawler.rs:267-269): per source page in seq order, accepted links
-        (dups included) consume the per-page ``remaining`` budget; only
-        unseen ones join the frontier. Candidate set is bounded by the API
-        page limit (≤10k) → small driver replay; seqs assigned inline.
-
-        Collect trim: only each page's first (limit − frontier_count) links
-        can ever be accepted — remaining_i ≤ that for every page — so rows
-        beyond that per-page position are truncated distributed-side before
-        the collect (a link-heavy 200-links/page round collects O(pages ×
-        cap), not every classified link). Seen rows within the window must
-        stay: accepted DUPS consume the page budget (crawlService.ts:57-66
-        slices before dedup), so an is_seen prefilter would change which
-        later links fit."""
-        cap = limit - self._frontier_count
-        if cap <= 0:
-            self._write_admitted([], round_no)
-            return 0
-        w_page = Window.partitionBy("source_priority", "source_seq") \
-                       .orderBy("link_pos")
-        rows = (
-            flagged.withColumn("_pn", F.row_number().over(w_page))
-            .filter(F.col("_pn") <= cap)
-            .select("source_priority", "source_seq", "link_pos",
-                    "link", "url_canon", "dedup_key", "is_seen")
-            .orderBy("source_priority", "source_seq", "link_pos").collect()
-        )
-        pr = self._priority_of_batch([r["link"] for r in rows])
-        admitted: list[tuple] = []
-        round_new: set[str] = set()
-        total = self._frontier_count
-        cur_seq = None
-        acc = 0
-        remaining = limit - total
-        seq = self._next_seq
-        for r in rows:
-            if r["source_seq"] != cur_seq:
-                cur_seq = r["source_seq"]
-                remaining = limit - total
-                acc = 0
-            if remaining <= 0 or acc >= remaining:
-                continue
-            acc += 1
-            if not r["is_seen"] and r["dedup_key"] not in round_new:
-                round_new.add(r["dedup_key"])
-                link = r["link"]
-                admitted.append((
-                    link, r["url_canon"], urlkit.url_host(link), 0,
-                    urlkit.get_url_depth(urlkit.url_path(link)),
-                    pr(link), round_no, seq,
-                ))
-                seq += 1
-                total += 1
-        self._write_admitted(admitted, round_no)
-        return len(admitted)
+        return list(round_new.items())
 
     def _write_admitted(self, admitted: list[tuple], round_no: int) -> None:
-        # Driver-built rows are small by construction (small-round /
-        # limit-replay paths only): compute host_bucket with the python
+        # Driver-built rows are small by construction (seed round and
+        # _replay_admission only): compute host_bucket with the python
         # xxhash64 twin (bit-parity gated in tests/test_urlkit.py) and
         # write the per-bucket files directly with pyarrow — pushing
         # O(1000) driver rows through Spark's dynamic-partition committer

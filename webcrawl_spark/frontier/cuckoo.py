@@ -25,9 +25,9 @@ from __future__ import annotations
 
 import numpy as np
 
-from .bloom import _mix
+from .bloom import BloomShard, _mix, bits_for, optimal_k
 
-__all__ = ["CuckooShard", "shard_from_bytes", "buckets_for"]
+__all__ = ["CuckooShard", "shard_from_bytes", "buckets_for", "update_blob"]
 
 MAGIC = 0x43_4B_46_31                   # "CKF1"
 SLOTS = 4
@@ -196,9 +196,26 @@ def _spill_key(idx: int, fp: int) -> np.ndarray:
 
 def shard_from_bytes(blob: bytes):
     """Dispatch on the blob magic: cuckoo ("CKF1") else Bloom."""
-    from .bloom import BloomShard
-
     if len(blob) >= 24 and np.frombuffer(blob[:8],
                                          dtype=np.int64)[0] == MAGIC:
         return CuckooShard.from_bytes(blob)
     return BloomShard.from_bytes(blob)
+
+
+def update_blob(old: bytes | None, hashes, engine) -> bytes:
+    """One bucket's shard update, the merge kernel of both round executors:
+    deserialize ``old`` (or start an ``engine.seen_filter`` shard sized from
+    the engine's per-shard key budget), add the signed-int64 Spark xxhash64
+    key ``hashes``, re-serialize. Membership is insertion-order-independent."""
+    if old is not None:
+        shard = shard_from_bytes(old)
+    elif engine.seen_filter == "cuckoo":
+        shard = CuckooShard(buckets_for(engine.bloom_keys_per_shard))
+    else:
+        m_bits = bits_for(engine.bloom_keys_per_shard, engine.bloom_fp_rate)
+        shard = BloomShard(m_bits, optimal_k(m_bits,
+                                             engine.bloom_keys_per_shard))
+    hashes = np.asarray(hashes, dtype=np.int64)
+    if len(hashes):
+        shard.add(hashes.astype(np.uint64))
+    return shard.to_bytes()

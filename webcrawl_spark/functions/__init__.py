@@ -23,10 +23,8 @@ from ..kernels.classify import (
     FILE_EXTENSIONS,
     NON_WEB_PROTOCOLS,
     FilterOptions,
-    classify_link,
     filter_url,
-    _build_robot,
-    _compile_patterns,
+    link_classifier,
 )
 from ..kernels.htmlkit import (
     decode_html,
@@ -194,18 +192,8 @@ def classify_links_udf(opts: FilterOptions):
     Per-batch parse/compile work is hoisted once."""
 
     def classify_batch(links: pd.Series) -> pd.DataFrame:
-        base = urlkit.parse_url(opts.base_url)
-        initial = urlkit.parse_url(opts.initial_url)
-        excludes = _compile_patterns(opts.excludes)
-        includes = _compile_patterns(opts.includes)
-        robot = _build_robot(opts)
-        rows = [
-            classify_link(
-                link or "", opts, _base=base, _initial=initial,
-                _excludes=excludes, _includes=includes, _robot=robot,
-            )
-            for link in links
-        ]
+        classify = link_classifier(opts)
+        rows = [classify(link) for link in links]
         return pd.DataFrame(rows, columns=["allowed", "url", "denial_reason"])
 
     return pandas_udf(classify_batch, CLASSIFY_SCHEMA)

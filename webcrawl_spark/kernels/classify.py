@@ -278,6 +278,25 @@ def classify_link(
     return False, url_str, DenialReason.EXTERNAL_LINK
 
 
+def link_classifier(opts: FilterOptions):
+    """``classify(link) -> (allowed, url, denial_reason)``: classify_link
+    with the options' base/initial URLs, patterns and robots parsed once,
+    for callers that classify many links under one FilterOptions (a null
+    link classifies as the empty string)."""
+    base = parse_url(opts.base_url)
+    initial = parse_url(opts.initial_url)
+    excludes = _compile_patterns(opts.excludes)
+    includes = _compile_patterns(opts.includes)
+    robot = _build_robot(opts)
+
+    def classify(link: str | None) -> tuple[bool, str | None, str | None]:
+        return classify_link(link or "", opts, _base=base, _initial=initial,
+                             _excludes=excludes, _includes=includes,
+                             _robot=robot)
+
+    return classify
+
+
 def filter_links(links: list[str], opts: FilterOptions) -> tuple[list[str], dict[str, str]]:
     """Batch F1 with the inline limit short-circuit (crawler.rs:230-379):
     accepted links keep their original (unresolved) string, iteration stops
@@ -286,21 +305,13 @@ def filter_links(links: list[str], opts: FilterOptions) -> tuple[list[str], dict
     limit = max(0, opts.limit) if opts.limit is not None else None
     if limit == 0:
         return [], {}
-    base = parse_url(opts.base_url)
-    initial = parse_url(opts.initial_url)
-    excludes = _compile_patterns(opts.excludes)
-    includes = _compile_patterns(opts.includes)
-    robot = _build_robot(opts)
-
+    classify = link_classifier(opts)
     accepted: list[str] = []
     denials: dict[str, str] = {}
     for link in links:
         if limit is not None and len(accepted) >= limit:
             break
-        ok, _, reason = classify_link(
-            link, opts, _base=base, _initial=initial,
-            _excludes=excludes, _includes=includes, _robot=robot,
-        )
+        ok, _, reason = classify(link)
         if ok:
             accepted.append(link)
         elif reason is not None:

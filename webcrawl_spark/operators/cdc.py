@@ -67,8 +67,12 @@ def _gear_table():
         import numpy as np
 
         rng = np.random.RandomState(2016)
-        hi = rng.randint(0, 1 << 32, size=256).astype(np.uint64)
-        lo = rng.randint(0, 1 << 32, size=256).astype(np.uint64)
+        # explicit dtype: the default int is 32-bit on some platforms,
+        # where a 1 << 32 bound would raise
+        hi = rng.randint(0, 1 << 32, size=256, dtype=np.uint32) \
+            .astype(np.uint64)
+        lo = rng.randint(0, 1 << 32, size=256, dtype=np.uint32) \
+            .astype(np.uint64)
         _GEAR_TABLE = (hi << np.uint64(32)) | lo
     return _GEAR_TABLE
 

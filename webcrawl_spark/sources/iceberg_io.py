@@ -33,9 +33,9 @@ feature the stand-in emulates):
                                  incremental snapshot-range scan; partition
                                  pruning on ``round`` makes it O(rounds in
                                  range)
-  bucket_data_files(t)        → the ``t.files`` metadata table → committed
+  bucket_files(t)             → the ``t.files`` metadata table → committed
                                  parquet file paths per host_bucket, for
-                                 the executor-side bucket-local seen-check
+                                 the bucket-local seen-check
                                  (≙ the storage-partitioned-join scan;
                                  replaces the parquet backend's task-side
                                  directory glob, which would see orphaned
@@ -225,6 +225,15 @@ class IcebergTableIO:
               else self.spark.createDataFrame(pdf))
         self.append(df, table, round_no, partition_by=partition_by)
 
+    def read_local(self, table: str, round_no: int,
+                   columns: list[str] | None = None):
+        """One round's rows as a pandas DataFrame. Iceberg reads go
+        through the catalog (committed snapshot files only), so this is
+        read_round + toPandas — the pyarrow path is a parquet-backend
+        optimization, as in append_local."""
+        df = self.read_round(table, round_no)
+        return (df.select(*columns) if columns else df).toPandas()
+
     def append(self, df: DataFrame, table: str, round_no: int,
                partition_by: list[str] | None = None) -> None:
         """Append this round's rows; idempotent per round (dynamic
@@ -299,17 +308,18 @@ class IcebergTableIO:
             df = df.drop("round")
         return df
 
-    # --- executor-side file access (bucket-local seen-check) -------------
-    def bucket_data_files(self, table: str,
-                          upto_round: int | None = None) -> dict[int, list[str]]:
-        """host_bucket → committed data-file paths, from the table's
-        ``.files`` metadata table (never the directory listing — Iceberg
-        dirs can hold orphaned uncommitted files). One driver-side metadata
-        query per round; the probe tasks read their bucket's paths with
+    # --- per-bucket file access (bucket-local seen-check) ----------------
+    def bucket_files(self, table: str, upto_round: int | None = None):
+        """(cache key, host_bucket → committed data-file paths), the paths
+        from the table's ``.files`` metadata table (never the directory
+        listing — Iceberg dirs can hold orphaned uncommitted files). One
+        driver-side metadata query per round; the seen-check readers
+        (probe tasks or the driver) read their bucket's paths with
         pyarrow, nothing shuffles."""
+        key = f"{self.root}#{table}"
         limit = self.committed_round() if upto_round is None else upto_round
         if not self._exists(table):
-            return {}
+            return key, {}
         rows = self.spark.sql(
             f"SELECT partition, file_path FROM {self._qt(table)}.files"
         ).collect()
@@ -322,4 +332,4 @@ class IcebergTableIO:
             if b is None:
                 continue
             out.setdefault(int(b), []).append(r["file_path"])
-        return out
+        return key, out

@@ -27,7 +27,21 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["TableIO"]
+__all__ = ["TableIO", "round_entries"]
+
+
+def round_entries(tdir: str, after: float = -1,
+                  upto: float = float("inf")) -> list[tuple[int, str]]:
+    """(round, path) of a table directory's ``round=N`` entries (dirs, or
+    ``round=N.json`` files) with after < N <= upto, in round order."""
+    found = []
+    if os.path.isdir(tdir):
+        for entry in os.listdir(tdir):
+            if entry.startswith("round="):
+                rnd = int(entry.split("=", 1)[1].split(".")[0])
+                if after < rnd <= upto:
+                    found.append((rnd, os.path.join(tdir, entry)))
+    return sorted(found)
 
 
 class TableIO:
@@ -72,18 +86,11 @@ class TableIO:
         (crash cleanup before re-running a round)."""
         committed = self.committed_round()
         for table in tables:
-            tdir = os.path.join(self.root, table)
-            if not os.path.isdir(tdir):
-                continue
-            for entry in os.listdir(tdir):
-                if entry.startswith("round="):
-                    rnd = int(entry.split("=", 1)[1].split(".")[0])
-                    if rnd > committed:
-                        path = os.path.join(tdir, entry)
-                        if os.path.isdir(path):
-                            shutil.rmtree(path)
-                        else:
-                            os.remove(path)
+            for _, path in round_entries(self._table_dir(table), committed):
+                if os.path.isdir(path):
+                    shutil.rmtree(path)
+                else:
+                    os.remove(path)
 
     # --- driver-side JSON rows (metrics-scale data; no Spark job) --------
     def append_json(self, record: dict, table: str, round_no: int) -> None:
@@ -93,27 +100,25 @@ class TableIO:
             json.dump(record, f)
 
     def read_json(self, table: str, upto_round: int | None = None) -> list[dict]:
-        limit = self.committed_round() if upto_round is None else upto_round
-        tdir = self._table_dir(table)
         out = []
-        if os.path.isdir(tdir):
-            for entry in sorted(os.listdir(tdir)):
-                if entry.startswith("round=") and entry.endswith(".json"):
-                    rnd = int(entry.split("=", 1)[1].split(".")[0])
-                    if rnd <= limit:
-                        with open(os.path.join(tdir, entry)) as f:
-                            out.append(json.load(f))
+        for _, path in self._rounds(table, upto_round=upto_round):
+            if path.endswith(".json"):
+                with open(path) as f:
+                    out.append(json.load(f))
         return out
 
     # --- table ops ------------------------------------------------------
     def _table_dir(self, table: str) -> str:
         return os.path.join(self.root, table)
 
+    def _rounds(self, table: str, after_round: int = -1,
+                upto_round: int | None = None) -> list[tuple[int, str]]:
+        """round_entries bounded to the committed round by default."""
+        limit = self.committed_round() if upto_round is None else upto_round
+        return round_entries(self._table_dir(table), after_round, limit)
+
     def exists(self, table: str) -> bool:
-        tdir = self._table_dir(table)
-        return os.path.isdir(tdir) and any(
-            e.startswith("round=") for e in os.listdir(tdir)
-        )
+        return bool(round_entries(self._table_dir(table)))
 
     def append(self, df: DataFrame, table: str, round_no: int,
                partition_by: list[str] | None = None) -> None:
@@ -130,7 +135,7 @@ class TableIO:
                      schema: str | None = None) -> None:
         """Driver-resident rows (a pandas DataFrame) → parquet files
         written directly with pyarrow — no Spark job, no dynamic-partition
-        committer. The small-round admission paths collect their rows to
+        committer. The driver round-tail executor collects its rows to
         the driver anyway; pushing them back through a partitioned Spark
         write costs ~1-3 s of committer overhead per round vs ~10 ms here.
         Same layout and overwrite-idempotence as append(); partition
@@ -171,6 +176,30 @@ class TableIO:
             pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False),
                            os.path.join(path, "part-00000.parquet"))
 
+    def read_local(self, table: str, round_no: int,
+                   columns: list[str] | None = None):
+        """One round's rows as a pandas DataFrame, read on the driver with
+        pyarrow — the read twin of append_local (no Spark job). Hive
+        partition directories restore their columns as integers; a round
+        directory without data files reads as an empty frame."""
+        import pandas as pd
+        import pyarrow.dataset as ds
+
+        path = os.path.join(self._table_dir(table), f"round={round_no}")
+        if not os.path.isdir(path):
+            raise FileNotFoundError(f"no data for {table} round={round_no}")
+        data = ds.dataset(path, format="parquet", partitioning="hive")
+        if not data.files:
+            return pd.DataFrame(columns=columns)
+        return data.to_table(columns=columns).to_pandas()
+
+    def bucket_files(self, table: str, upto_round: int | None = None):
+        """(cache key, host_bucket → committed data files) for per-bucket
+        reads outside Spark (the bucket-local seen check). The file map is
+        None here: readers glob the table's ``round=N/host_bucket=B``
+        directories themselves, bounded to committed rounds."""
+        return self._table_dir(table), None
+
     def read_round(self, table: str, round_no: int) -> DataFrame:
         """Read exactly one round's files (partition discovery restores any
         partitionBy columns)."""
@@ -181,16 +210,8 @@ class TableIO:
 
     def latest_round(self, table: str, upto_round: int | None = None) -> int | None:
         """Greatest committed round this table has data for (None if none)."""
-        limit = self.committed_round() if upto_round is None else upto_round
-        tdir = self._table_dir(table)
-        best = None
-        if os.path.isdir(tdir):
-            for entry in os.listdir(tdir):
-                if entry.startswith("round="):
-                    rnd = int(entry.split("=", 1)[1].split(".")[0])
-                    if rnd <= limit and (best is None or rnd > best):
-                        best = rnd
-        return best
+        rounds = self._rounds(table, upto_round=upto_round)
+        return rounds[-1][0] if rounds else None
 
     def read_rounds(self, table: str, after_round: int,
                     upto_round: int | None = None,
@@ -202,8 +223,6 @@ class TableIO:
         discover_partitions=False skips basePath partition discovery (for
         tables whose data already carries the needed columns — avoids the
         round data-vs-partition column clash on crawl_result)."""
-        limit = self.committed_round() if upto_round is None else upto_round
-        tdir = self._table_dir(table)
         def has_parquet(path: str) -> bool:
             # a round with zero rows leaves a dir with no part files
             # (partitioned writes emit nothing) — unreadable, skip it
@@ -212,29 +231,19 @@ class TableIO:
                 for _, _, files in os.walk(path) for f in files
             )
 
-        paths = [
-            p for e in sorted(os.listdir(tdir))
-            if e.startswith("round=")
-            and after_round < int(e.split("=", 1)[1]) <= limit
-            and has_parquet(p := os.path.join(tdir, e))
-        ] if os.path.isdir(tdir) else []
+        paths = [p for _, p in self._rounds(table, after_round, upto_round)
+                 if has_parquet(p)]
         if not paths:
             return None
         reader = self.spark.read
         if discover_partitions:
-            reader = reader.option("basePath", tdir)
+            reader = reader.option("basePath", self._table_dir(table))
         return reader.parquet(*paths)
 
     def read(self, table: str, upto_round: int | None = None) -> DataFrame:
         """Snapshot read: only committed rounds (or ≤ upto_round)."""
-        limit = self.committed_round() if upto_round is None else upto_round
-        tdir = self._table_dir(table)
-        paths = [
-            os.path.join(tdir, e)
-            for e in sorted(os.listdir(tdir)) if e.startswith("round=")
-            and int(e.split("=", 1)[1]) <= limit
-        ] if os.path.isdir(tdir) else []
+        paths = [p for _, p in self._rounds(table, upto_round=upto_round)]
         if not paths:
             raise FileNotFoundError(f"no committed data for table {table}")
-        df = self.spark.read.option("basePath", tdir).parquet(*paths)
-        return df
+        return self.spark.read.option("basePath", self._table_dir(table)) \
+            .parquet(*paths)

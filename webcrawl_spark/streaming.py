@@ -175,9 +175,10 @@ def stream_curate(
     1e-9 grid (parity-tested). Parity PRECONDITION: the LM's vocabulary
     must fit ``max_vocab`` — the denominator keeps the full-table N and V,
     so tokens truncated past the cutoff would score as OOV (count 0) and
-    diverge from the batch scorer; a warning is logged when the collect
-    hits the cap. Downstream: filter on ``c4_pass & gopher_pass`` and a
-    ppl_nano cutoff from the batch percentile pass."""
+    diverge from the batch scorer; a warning is logged when the full
+    distinct-token count exceeds the cap. Downstream: filter on
+    ``c4_pass & gopher_pass`` and a ppl_nano cutoff from the batch
+    percentile pass."""
     import math
 
     from pyspark.sql.types import LongType
@@ -194,16 +195,16 @@ def stream_curate(
 
     rows = (lm.orderBy(F.desc("cnt"), F.asc("token"))
             .limit(max_vocab).collect())
-    if len(rows) == max_vocab:
-        import warnings
-
-        warnings.warn(
-            "stream_curate: LM vocabulary hit max_vocab — truncated tokens "
-            "will score as OOV and batch/stream ppl parity no longer holds",
-            stacklevel=2)
     counts = {r["token"]: int(r["cnt"]) for r in rows}
     totals = lm.agg(F.sum("cnt"), F.count("*")).first()
     n_total, vocab = int(totals[0] or 0), int(totals[1] or 0)
+    if vocab > max_vocab:
+        import warnings
+
+        warnings.warn(
+            "stream_curate: LM vocabulary exceeds max_vocab — truncated "
+            "tokens will score as OOV and batch/stream ppl parity no longer "
+            "holds", stacklevel=2)
     ln_denom = math.log(n_total + add_k * (vocab + 1))
 
     import re
