@@ -209,6 +209,34 @@ class TestFilterUrl:
         ok, _, _ = filter_url("https://sub.example.com/blog", "https://example.com", o)
         assert ok  # F2's subdomain branch has no include check (crawler.rs:542-549)
 
+    def test_page_links_builds_f2_once_per_page(self, monkeypatch):
+        """page_links compiles F2 (base URL, excludes, robots parser) once
+        per call, not once per href — iframe recursion included — and
+        keeps filter_url's verdicts."""
+        from urllib.parse import quote
+
+        from webcrawl_spark.kernels import classify
+        from webcrawl_spark.kernels.crawl import page_links
+
+        built = []
+        build = classify._build_robot
+        monkeypatch.setattr(classify, "_build_robot",
+                            lambda o: built.append(1) or build(o))
+        o = opts(ignore_robots_txt=False, excludes=["^/skip"],
+                 robots_txt="User-agent: *\nDisallow: /private\n")
+        hrefs = ["/a", "/private/x", "/skip/y", "https://other.com/",
+                 "mailto:x@example.com", "b#frag"]
+        inner = '<a href="/in-frame">f</a>'
+        html = ("".join(f'<a href="{h}">l</a>' for h in hrefs)
+                + f'<iframe src="data:text/html,{quote(inner)}"></iframe>')
+        links = page_links(html, "https://example.com/", o)
+        assert len(built) == 1
+        assert links == ["https://example.com/a", "https://example.com/in-frame"]
+        built.clear()
+        assert [filter_url(h, "https://example.com/", o)[0]
+                for h in hrefs] == [True, False, False, False, False, False]
+        assert len(built) == len(hrefs)
+
 
 class TestUnsafeHost:
     """SSRF guard vectors (safeFetch.ts semantics): private/loopback/

@@ -45,6 +45,32 @@ def run_engine(spark, site_pages_df, cfg, tmp_path, engine=None):
     return crawl
 
 
+def check_commits(monkeypatch):
+    """Wrap SparkCrawl._commit so every committed round is checked for
+    the state later rounds and resumes read without repair: the latest
+    committed bloom_shards round reads back with blobs, and a round that
+    fetched has its fetched_seqs sidecar with one seq per fetched URL.
+    Returns the list of rounds checked."""
+    checked = []
+    commit = SparkCrawl._commit
+
+    def checked_commit(self, round_no, done):
+        commit(self, round_no, done)
+        io = self.io
+        shards = io.read_local("bloom_shards", io.latest_round("bloom_shards"),
+                               columns=["host_bucket", "blob"])
+        assert len(shards) > 0, round_no
+        if round_no > 0 and not done:
+            fetched = io.read_json("round_metrics")[-1]
+            assert fetched["round"] == round_no
+            seqs = io.read_local("fetched_seqs", round_no, columns=["seq"])
+            assert len(seqs) == fetched["fetched"] > 0
+        checked.append(round_no)
+
+    monkeypatch.setattr(SparkCrawl, "_commit", checked_commit)
+    return checked
+
+
 class TestOracleEquivalence:
     def test_round_crawl_matches_reference_without_budget(self, site, fetch):
         seed = f"https://{site.hosts[0]}/"
@@ -102,17 +128,6 @@ class TestEngineParity:
         assert crawl.fetch_order() == oracle.fetch_order
         engine_seen = {r["url"] for r in crawl.frontier().select("url").collect()}
         assert engine_seen == set(oracle.discovered)
-
-    def test_no_bloom_same_result(self, spark, site, fetch, site_pages_df,
-                                  tmp_path):
-        seed = f"https://{site.hosts[1]}/"
-        cfg = CrawlConfig(seed_url=seed, limit=20, max_depth=2,
-                          allow_backward_crawling=True)
-        with_bloom = run_engine(spark, site_pages_df, cfg, tmp_path / "a",
-                                EngineConfig(use_bloom=True))
-        without = run_engine(spark, site_pages_df, cfg, tmp_path / "b",
-                             EngineConfig(use_bloom=False))
-        assert with_bloom.fetch_order() == without.fetch_order()
 
     def test_fetch_udf_mode_parity(self, spark, site, fetch, site_pages_df,
                                    tmp_path):
@@ -676,6 +691,7 @@ class TestDriverFastTailParity:
             "driver", SparkCrawl._driver_round_tail))
         monkeypatch.setattr(SparkCrawl, "_distributed_round_tail", counted(
             "distributed", SparkCrawl._distributed_round_tail))
+        committed = check_commits(monkeypatch)
 
         seed = f"https://{site.hosts[0]}/"
         cfg = CrawlConfig(seed_url=seed, limit=limit, max_depth=2,
@@ -701,33 +717,9 @@ class TestDriverFastTailParity:
         m_drv = sorted(tuple(r) for r in drv.metrics().collect())
         m_dist = sorted(tuple(r) for r in dist.metrics().collect())
         assert m_drv == m_dist
-
-
-class TestBloomBootstrap:
-    def test_resume_with_bloom_on_nobloom_checkpoint(self, spark, site, fetch,
-                                                     site_pages_df, tmp_path):
-        """A workdir whose bloom_shards table doesn't cover the committed
-        frontier (crawl started with use_bloom=False, resumed with True) must
-        rebuild the shard set from the full frontier — otherwise older URLs
-        probe 'surely new' and get re-admitted as duplicates."""
-        seed = f"https://{site.hosts[0]}/"
-        cfg = CrawlConfig(seed_url=seed, limit=None, max_depth=3,
-                          allow_backward_crawling=True, host_budget=6)
-        baseline = run_engine(spark, site_pages_df, cfg, tmp_path / "base",
-                              EngineConfig(use_bloom=True))
-        work = str(tmp_path / "switch")
-        c1 = SparkCrawl(spark, site_pages_df, cfg, work,
-                        engine=EngineConfig(use_bloom=False))
-        c1.run(max_rounds=3)
-        assert not c1.io.exists("bloom_shards")
-        c2 = SparkCrawl(spark, site_pages_df, cfg, work,
-                        engine=EngineConfig(use_bloom=True))
-        c2.run()
-        order = c2.fetch_order()
-        assert order == baseline.fetch_order()
-        assert len(order) == len(set(order))  # no re-fetches
-        urls = [r["url"] for r in c2.frontier().select("url").collect()]
-        assert len(urls) == len(set(urls))    # no duplicate admissions
+        # both crawls' rounds passed the commit checks
+        n_rounds = drv.io.committed_round() + dist.io.committed_round() + 2
+        assert len(committed) == n_rounds
 
 
 class TestResume:
@@ -749,62 +741,31 @@ class TestResume:
         b = {r["url"] for r in c2.frontier().select("url").collect()}
         assert a == b
 
-    def test_warm_resume_skips_backfill_listing(self, spark, site,
-                                                site_pages_df, tmp_path,
-                                                monkeypatch):
-        """Checkpoints stamped seqs_v>=1 must never run the O(history)
-        fetched-seqs repair listing on resume; a pre-sidecar checkpoint
-        (no stamp) must still run it once."""
-        import json
-        import os
-
-        from webcrawl_spark.frontier.crawl import SparkCrawl as SC
-
-        seed = f"https://{site.hosts[0]}/"
-        cfg = CrawlConfig(seed_url=seed, limit=20, max_depth=2,
-                          allow_backward_crawling=True)
-        work = str(tmp_path / "warm")
-        c1 = SparkCrawl(spark, site_pages_df, cfg, work)
-        c1.run(max_rounds=2)
-
-        def boom(self, committed):
-            raise AssertionError("backfill ran on a stamped checkpoint")
-
-        monkeypatch.setattr(SC, "_backfill_fetched_seqs", boom)
-        c2 = SparkCrawl(spark, site_pages_df, cfg, work)
-        c2._load_state()  # must not touch the backfill
-        monkeypatch.undo()
-
-        # strip the stamp (simulate a pre-sidecar checkpoint) → runs once
-        ckpt = os.path.join(work, "_checkpoint.json")
-        meta = json.load(open(ckpt))
-        meta.pop("seqs_v")
-        json.dump(meta, open(ckpt, "w"))
-        called = []
-        monkeypatch.setattr(
-            SC, "_backfill_fetched_seqs",
-            lambda self, committed: called.append(committed))
-        SparkCrawl(spark, site_pages_df, cfg, work)._load_state()
-        assert called
-
     def test_uncommitted_round_rolled_back(self, spark, site, site_pages_df,
-                                           tmp_path):
+                                           tmp_path, monkeypatch):
         import os
         seed = f"https://{site.hosts[0]}/"
         cfg = CrawlConfig(seed_url=seed, limit=20, max_depth=3,
                           allow_backward_crawling=True)
         work = str(tmp_path / "crash")
+        checked = check_commits(monkeypatch)
         c1 = SparkCrawl(spark, site_pages_df, cfg, work)
         c1.run(max_rounds=2)
         committed = c1.io.committed_round()
-        # simulate a crash: stray uncommitted round directory
-        stray = os.path.join(work, "fetch_log", f"round={committed + 1}")
-        os.makedirs(stray, exist_ok=True)
-        with open(os.path.join(stray, "garbage.parquet"), "w") as f:
-            f.write("not parquet")
+        # simulate a crash: stray uncommitted round directories, including
+        # torn shard sets for rounds the resumed crawl may commit without
+        # rewriting them (a round that admits nothing keeps the older set)
+        for table, rnd in [("fetch_log", committed + 1)] + [
+                ("bloom_shards", r) for r in range(committed + 1,
+                                                   committed + 11)]:
+            stray = os.path.join(work, table, f"round={rnd}")
+            os.makedirs(stray, exist_ok=True)
+            with open(os.path.join(stray, "garbage.parquet"), "w") as f:
+                f.write("not parquet")
         c2 = SparkCrawl(spark, site_pages_df, cfg, work)
         c2.run()
         assert c2.io.committed_round() > committed
+        assert checked == list(range(c2.io.committed_round() + 1))
         assert not os.path.exists(os.path.join(stray, "garbage.parquet")) or True
         # the resumed crawl is consistent
         assert len(c2.fetch_order()) == len(set(c2.fetch_order()))
@@ -857,28 +818,3 @@ def test_read_local_round_trips_append_local(tmp_path):
     with pytest.raises(FileNotFoundError):
         io.read_local("flat", 3)
 
-
-def test_extract_markdown_off(spark, tmp_path):
-    """EngineConfig(extract_markdown=False): crawl_result carries no
-    markdown column, link lineage and fetch order are unchanged."""
-    from webcrawl_spark.datagen import build_site, render_page_html
-    from webcrawl_spark.frontier.crawl import EngineConfig, SparkCrawl
-    from webcrawl_spark.frontier.oracle import CrawlConfig
-
-    site = build_site(seed=11, n_hosts=2, pages_per_host=8, n_hot_hosts=0)
-    rows = [(u, render_page_html(site, u).encode()) for u in site.urls()]
-    pages = spark.createDataFrame(rows, "url string, html binary")
-    cfg = CrawlConfig(seed_url=f"https://{site.hosts[0]}/", limit=None,
-                      max_depth=2, allow_backward_crawling=True,
-                      host_budget=4)
-    orders = {}
-    for tag, md in (("on", True), ("off", False)):
-        wd = str(tmp_path / tag)
-        crawl = SparkCrawl(spark, pages, cfg, wd,
-                           engine=EngineConfig(extract_markdown=md))
-        crawl.run()
-        cols = crawl.results().columns
-        assert ("markdown" in cols) == md
-        assert "links" in cols
-        orders[tag] = crawl.fetch_order()
-    assert orders["on"] == orders["off"] and orders["on"]

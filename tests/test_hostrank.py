@@ -99,16 +99,26 @@ class TestPagerank:
                                    "src string, dst string, weight double")
         assert host_pagerank(df, 3).count() == 0
 
-    def test_checkpoint_cadence_does_not_change_result(self, spark):
-        edges = _random_edges(11)
-        df = spark.createDataFrame(
-            edges, "src string, dst string, weight double")
-        a = {r["host"]: r["rank"]
-             for r in host_pagerank(df, 9, checkpoint_every=2).collect()}
-        b = {r["host"]: r["rank"]
-             for r in host_pagerank(df, 9, checkpoint_every=100).collect()}
-        for h in a:
-            assert a[h] == pytest.approx(b[h], abs=1e-12)
+
+@pytest.mark.parametrize("op", ["host_pagerank", "host_hits"])
+def test_input_lineage_runs_once(spark, op):
+    """The input edge lineage (host_link_edges: a full HTML parse per
+    page) is evaluated exactly once per call: a counting UDF on the input
+    rows sees each row once, whatever the iteration count."""
+    from webcrawl_spark.operators import hostrank
+
+    edges = _random_edges(3)
+    acc = spark.sparkContext.accumulator(0)
+
+    def tag(src):
+        acc.add(1)
+        return src
+
+    df = spark.createDataFrame(
+        edges, "src string, dst string, weight double").select(
+        F.udf(tag, "string")("src").alias("src"), "dst", "weight")
+    getattr(hostrank, op)(df, 4).collect()
+    assert acc.value == len(edges)
 
 
 class TestHostLinkEdges:

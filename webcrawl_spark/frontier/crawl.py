@@ -109,6 +109,9 @@ from .oracle import CrawlConfig
 
 __all__ = ["SparkCrawl", "EngineConfig"]
 
+# rounds one run() executes when the caller gives no max_rounds
+MAX_ROUNDS = 1000
+
 # fetch_log is a projection of crawl_result (columnar reads prune the
 # markdown/links columns away); bloom shards persist per round so resume
 # never rescans the frontier.
@@ -135,29 +138,22 @@ class EngineConfig:
         self,
         num_buckets: int = 32,
         dedup_key: str = "url",           # "url" (reference parity) | "url_canon"
-        use_bloom: bool = True,
         seen_filter: str = "bloom",       # "bloom" | "cuckoo" (north rule
         #                                   names both; same shard contract)
         bloom_keys_per_shard: int = 100_000,
         bloom_fp_rate: float = 0.01,
-        max_rounds: int = 1000,
-        extract_markdown: bool = True,
         small_round_threshold: int = 5000,
         compact_queued_every: int = 8,
         compact_keys_every: int = 16,
-        ssrf_guard: bool = True,
         live_robots: bool = False,
     ) -> None:
         self.num_buckets = num_buckets
         self.dedup_key = dedup_key
-        self.use_bloom = use_bloom
         if seen_filter not in ("bloom", "cuckoo"):
             raise ValueError("seen_filter must be 'bloom' or 'cuckoo'")
         self.seen_filter = seen_filter
         self.bloom_keys_per_shard = bloom_keys_per_shard
         self.bloom_fp_rate = bloom_fp_rate
-        self.max_rounds = max_rounds
-        self.extract_markdown = extract_markdown
         # rounds with fewer CANDIDATE LINKS than this run the round tail on
         # the driver executor (identical result, none of the distributed
         # stages' fixed cost); bigger rounds run the distributed executor.
@@ -174,11 +170,6 @@ class EngineConfig:
         # one consolidated file + the post-snapshot round deltas instead of
         # one file per round for the crawl's lifetime. 0 disables.
         self.compact_keys_every = compact_keys_every
-        # live (fetch_udf/cond_fetch_udf) mode only: never dial loopback/
-        # private/link-local hosts (safeFetch.ts semantics) — denied rows
-        # get status 403, the fetch UDF is never invoked for them. Corpus
-        # replay never dials out, so the guard is a no-op there.
-        self.ssrf_guard = ssrf_guard
         # live modes only: per-host robots.txt cache (the north rule's
         # "robots.txt cache"): each round fetches robots.txt ONCE for
         # selection hosts not yet cached (robots_cache table, committed
@@ -200,7 +191,7 @@ def _unsafe_host_udf():
     return pandas_udf(batch, T.BooleanType())
 
 
-def _extract_udf(cfg: CrawlConfig, extract_markdown: bool):
+def _extract_udf(cfg: CrawlConfig):
     """Fused X2+L2 extraction: (html, url, expandable) →
     struct(markdown, links) in ONE Arrow stage. Markdown is produced for
     every fetched page; links only when ``expandable`` (depth/status
@@ -215,7 +206,7 @@ def _extract_udf(cfg: CrawlConfig, extract_markdown: bool):
         mds, lnks = [], []
         for html, url, expand in zip(htmls, urls, expandable):
             text = _as_text(html)
-            if extract_markdown and text:
+            if text:
                 try:
                     mds.append(markdown_for_page(text, url))
                 except Exception:
@@ -387,7 +378,8 @@ class SparkCrawl:
           J5's live twin). Pair with ``fetch_cache_dir`` (shareable across
           crawls): validated URLs are served from the cache on 304 and
           fresh responses with validators are recorded back.
-        Live modes apply the SSRF guard (EngineConfig.ssrf_guard).
+        Live modes always apply the SSRF guard: loopback/private/link-local
+        hosts are denied with status 403 and never dialed.
         """
         modes = [pages is not None, fetch_udf is not None,
                  cond_fetch_udf is not None]
@@ -434,8 +426,7 @@ class SparkCrawl:
         self.io.rollback_uncommitted(TABLES)
         self._load_state()
         executed = 0
-        budget_rounds = (max_rounds if max_rounds is not None
-                         else self.engine.max_rounds)
+        budget_rounds = max_rounds if max_rounds is not None else MAX_ROUNDS
         if self.io.committed_round() < 0:
             self._seed_round()
             executed += 1
@@ -511,11 +502,8 @@ class SparkCrawl:
         # fetched seqs come from the single-file-per-round sidecar (≙ the
         # Iceberg equality-delete files this view emulates) — reading the
         # wide crawl_result table here would touch one file per extraction
-        # task per round; fall back to it only on pre-sidecar checkpoints
+        # task per round
         fetched = self.io.read_rounds("fetched_seqs", since)
-        if fetched is None:
-            fetched = self.io.read_rounds("crawl_result", since,
-                                          discover_partitions=False)
         if fetched is None:
             return base
         fetched = fetched.select(F.col("seq").alias("fseq"))
@@ -614,32 +602,6 @@ class SparkCrawl:
         self._done = bool(meta.get("done", False))
         self._frontier_count = int(meta.get("frontier_count",
                                             self._next_seq))
-        # seqs_v: checkpoint-format version flag. Any commit written by a
-        # sidecar-aware engine stamps it, so warm resumes skip the
-        # O(history) repair listing entirely — it runs at most ONCE per
-        # pre-sidecar checkpoint (r3 verdict "what's wrong #2").
-        if int(meta.get("seqs_v", 0)) < 1 and self.io.kind == "parquet":
-            self._backfill_fetched_seqs(committed)
-
-    def _backfill_fetched_seqs(self, committed: int) -> None:
-        """Resume repair for pre-sidecar checkpoints: every committed
-        crawl_result round must have a fetched_seqs sidecar, else the
-        queued view would silently miss those rounds' fetched seqs and
-        re-admit them. One-time O(history) listing + tiny writes (≙ an
-        Iceberg rewrite-deletes maintenance pass); version-gated by
-        _load_state, so it never runs on checkpoints written by this
-        engine version."""
-        seq_dir = self.io._table_dir("fetched_seqs")
-        for rnd, path in self.io._rounds("crawl_result",
-                                         upto_round=committed):
-            if os.path.isdir(os.path.join(seq_dir, os.path.basename(path))):
-                continue
-            try:
-                rows = self.io.read_round("crawl_result", rnd)
-            except FileNotFoundError:
-                continue
-            self.io.append(rows.select("seq").coalesce(1),
-                           "fetched_seqs", rnd)
 
     def _dedup_col(self) -> str:
         return "url" if self.engine.dedup_key == "url" else "url_canon"
@@ -647,14 +609,14 @@ class SparkCrawl:
     def _commit(self, round_no: int, done: bool) -> None:
         self.io.commit_round(
             round_no, processed=self._processed, next_seq=self._next_seq,
-            frontier_count=self._frontier_count, done=done, seqs_v=1,
+            frontier_count=self._frontier_count, done=done,
         )
 
     def _seed_round(self) -> None:
         """Round 0: seed URL first, then sitemap-contributed URLs
         (tryGetSitemap semantics via sources/seeding.py — shared verbatim
         with the oracle, so seeding order matches by construction)."""
-        cfg, eng = self.cfg, self.engine
+        cfg = self.cfg
         seeds: list[str] = [cfg.seed_url]
         if cfg.use_sitemap and cfg.sitemaps:
             from ..sources.seeding import sitemap_seed_list
@@ -675,9 +637,10 @@ class SparkCrawl:
             for seq, url in enumerate(seeds)
         ]
         self._write_admitted(rows, 0)
-        if eng.use_bloom:
-            self._write_shards(self.io.read_round("frontier", 0), None, 0,
-                               n_rows=len(rows))
+        # every committed round has a shard set from here on: round 0's
+        # covers the seeds, later rounds replace it when they admit URLs
+        self._write_shards(self.io.read_round("frontier", 0), None, 0,
+                           n_rows=len(rows))
         self._frontier_count = len(rows)
         self._processed = 0
         self._next_seq = len(rows)
@@ -772,12 +735,10 @@ class SparkCrawl:
         return base
 
     # --- bloom shards (file-backed, executor-side lifecycle) --------------
-    def _shards_df(self) -> DataFrame | None:
-        """Latest committed shard set (host_bucket, blob), or None."""
-        latest = self.io.latest_round("bloom_shards")
-        if latest is None:
-            return None
-        return self.io.read_round("bloom_shards", latest)
+    def _shards_df(self) -> DataFrame:
+        """Latest committed shard set (host_bucket, blob)."""
+        return self.io.read_round("bloom_shards",
+                                  self.io.latest_round("bloom_shards"))
 
     def _cogroup_parts(self, n_rows: int) -> int:
         """Cogroup task count for the Bloom stages: spread buckets across
@@ -931,20 +892,16 @@ class SparkCrawl:
         batch to the UDF — conditional branches are not lazily evaluated
         per-row), denied as status 403 without ever dialing. Safe rows go
         through the plain or conditional fetch. Returns html + status."""
-        eng = self.engine
-        if eng.ssrf_guard:
-            flagged = selected.withColumn(
-                "_unsafe", _unsafe_host_udf()(F.col("host")))
-            safe = flagged.filter(~F.col("_unsafe")).drop("_unsafe")
-            denied = (
-                flagged.filter(F.col("_unsafe")).drop("_unsafe")
-                .withColumn("html", F.lit(None).cast("binary"))
-                .withColumn("status", F.lit(403))
-            )
-        else:
-            safe, denied = selected, None
+        flagged = selected.withColumn(
+            "_unsafe", _unsafe_host_udf()(F.col("host")))
+        safe = flagged.filter(~F.col("_unsafe")).drop("_unsafe")
+        denied = (
+            flagged.filter(F.col("_unsafe")).drop("_unsafe")
+            .withColumn("html", F.lit(None).cast("binary"))
+            .withColumn("status", F.lit(403))
+        )
         robots_denied = None
-        if eng.live_robots:
+        if self.engine.live_robots:
             safe, robots_denied = self._apply_live_robots(safe)
         if self.cond_fetch_udf is not None:
             fetched = self._cond_fetch(safe)
@@ -1251,14 +1208,12 @@ class SparkCrawl:
                        "priority", "seq", "status"]
         extracted = fetched.select(
             *result_cols,
-            _extract_udf(cfg, eng.extract_markdown)(
+            _extract_udf(cfg)(
                 F.col("html"), F.col("url"), expandable
             ).alias("_x"),
         )
         combined = extracted.select(
-            *result_cols,
-            *(["_x.markdown"] if eng.extract_markdown else []),
-            F.col("_x.links").alias("links"),
+            *result_cols, "_x.markdown", F.col("_x.links").alias("links"),
         ).withColumn("round", F.lit(round_no))
         # candidate count observed ON the write job (was a separate
         # count over the pinned classified candidates): gates the
@@ -1317,8 +1272,6 @@ class SparkCrawl:
         # (see the module docstring). Below the threshold the driver runs
         # the whole tail in-process — one Spark job (the link collect)
         # instead of the classify, probe and shard-merge python stages.
-        shards_exist = (eng.use_bloom
-                        and io.latest_round("bloom_shards") is not None)
         if n_candidates < eng.small_round_threshold:
             n_new, drv = self._driver_round_tail(round_no)
             cls = shards = None
@@ -1330,24 +1283,10 @@ class SparkCrawl:
 
         new_rows_file = (io.read_round("frontier", round_no)
                          if n_new else None)
-        if eng.use_bloom and not shards_exist:
-            # bootstrap: the shard table doesn't cover the committed
-            # frontier (resume of a pre-bloom checkpoint, or a crawl
-            # started with use_bloom=False) — seeding from only this
-            # round's rows would mark older frontier URLs 'surely new'
-            # and re-admit duplicates. Build from the FULL committed
-            # frontier plus this round's admissions instead.
-            base = self._frontier_df()
-            if n_new:
-                base = base.unionByName(new_rows_file.select(*base.columns))
-            self._write_shards(base, None, round_no,
-                               n_rows=self._frontier_count + n_new)
-        elif eng.use_bloom and n_new:
-            if drv is not None:
-                self._update_shards_local(drv["new_hashes"], round_no)
-            else:
-                self._write_shards(new_rows_file, shards, round_no,
-                                   n_rows=n_new)
+        if n_new and drv is not None:
+            self._update_shards_local(drv["new_hashes"], round_no)
+        elif n_new:
+            self._write_shards(new_rows_file, shards, round_no, n_rows=n_new)
         t = self._trace(round_no, "bloom shard write", t)
         self._maybe_compact_queued(queued, selected, new_rows_file, round_no)
         self._maybe_compact_keys(round_no)
@@ -1446,24 +1385,13 @@ class SparkCrawl:
         )
 
         # ---- seen-set check (bucket-local, no frontier shuffle) ----
-        # Bloom path: ONE cogroup stage computes exact is_seen — shard
-        # membership prefilter + per-bucket exact key read, all task-local
-        # (see _bloom_probe). No-bloom path (reference-parity/testing
-        # mode): classic exact left join against the frontier key column.
-        shards = self._shards_df() if eng.use_bloom else None
-        if shards is not None:
-            flagged = self._pin(
-                self._bloom_probe(allowed, shards, n_rows=n_candidates))
-            self._trace(round_no, "  distributed: seen-check probe pin", t)
-        else:
-            frontier_keys = self._frontier_df().select(
-                F.col(dedup).alias("seen_key"))
-            flagged = allowed.join(
-                frontier_keys.withColumn("is_seen_j", F.lit(True)),
-                allowed["dedup_key"] == F.col("seen_key"), "left",
-            ).withColumn(
-                "is_seen", F.coalesce(F.col("is_seen_j"), F.lit(False))
-            ).drop("is_seen_j", "seen_key")
+        # ONE cogroup stage computes exact is_seen — shard membership
+        # prefilter + per-bucket exact key read, all task-local (see
+        # _bloom_probe)
+        shards = self._shards_df()
+        flagged = self._pin(
+            self._bloom_probe(allowed, shards, n_rows=n_candidates))
+        self._trace(round_no, "  distributed: seen-check probe pin", t)
 
         if cfg.limit is None:
             return cls, shards, self._admit_distributed(flagged, round_no)

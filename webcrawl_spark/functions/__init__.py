@@ -23,8 +23,8 @@ from ..kernels.classify import (
     FILE_EXTENSIONS,
     NON_WEB_PROTOCOLS,
     FilterOptions,
-    filter_url,
     link_classifier,
+    url_filter,
 )
 from ..kernels.htmlkit import (
     decode_html,
@@ -204,10 +204,9 @@ def filter_url_udf(opts: FilterOptions):
     (href, page_url) → struct."""
 
     def batch(hrefs: pd.Series, page_urls: pd.Series) -> pd.DataFrame:
-        rows = [
-            filter_url(h or "", p or "", opts)
-            for h, p in zip(hrefs, page_urls)
-        ]
+        filter_href = url_filter(opts)
+        rows = [filter_href(h or "", p or "")
+                for h, p in zip(hrefs, page_urls)]
         return pd.DataFrame(rows, columns=["allowed", "url", "denial_reason"])
 
     return pandas_udf(batch, CLASSIFY_SCHEMA)

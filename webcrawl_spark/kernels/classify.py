@@ -7,6 +7,9 @@ call-site variants the reference exposes:
   no depth/file/include checks on the internal branch, excludes matched on
   path) — packages/firecrawl-rs/src/crawler.rs:396-557
 
+``link_classifier`` and ``url_filter`` are their compiled forms: options
+parsed once, then one call per link.
+
 Predicate order is semantic (first failure wins and is recorded); keep it.
 
 The Spark layer (webcrawl_spark.functions.classify_links) vectorizes
@@ -29,6 +32,7 @@ __all__ = [
     "classify_link",
     "filter_links",
     "filter_url",
+    "url_filter",
     "is_file_path",
     "is_unsafe_host",
     "FILE_EXTENSIONS",
@@ -319,6 +323,72 @@ def filter_links(links: list[str], opts: FilterOptions) -> tuple[list[str], dict
     return accepted, denials
 
 
+def url_filter(opts: FilterOptions):
+    """``filter(href, page_url) -> (allowed, url, denial_reason)``:
+    filter_url with the options' base URL, exclude patterns and robots
+    parsed once — F2's twin of link_classifier, for callers that filter
+    many hrefs under one FilterOptions."""
+    try:
+        base = parse_url(opts.base_url)
+    except URLParseError:
+        base = None
+    excludes = _compile_patterns(opts.excludes)
+    robot = _build_robot(opts)
+
+    def filter_href(href: str,
+                    page_url: str) -> tuple[bool, str | None, str | None]:
+        if base is None:
+            return False, None, DenialReason.URL_PARSE_ERROR
+        full_url = href
+        if not href.startswith("http"):
+            try:
+                full_url = str(join_url(page_url, href))
+            except URLParseError:
+                return False, None, DenialReason.URL_PARSE_ERROR
+        try:
+            url = parse_url(full_url)
+        except URLParseError:
+            return False, None, DenialReason.URL_PARSE_ERROR
+
+        path = url.path
+        url_str = str(url)
+        if _is_non_web_protocol(url_str):
+            return False, None, DenialReason.NON_WEB_PROTOCOL
+
+        if _is_internal(url, base):
+            if not _no_sections(url_str):
+                return False, None, DenialReason.SECTION_LINK
+            if excludes and any(r.search(path) for r in excludes):
+                return False, None, DenialReason.EXCLUDE_PATTERN
+            if robot is not None and not robot.allowed(url_str):
+                return False, None, DenialReason.ROBOTS_TXT
+            return True, full_url, None
+
+        if _is_social_media_or_email(url_str):
+            return False, None, DenialReason.SOCIAL_MEDIA
+        if excludes and any(r.search(url_str) for r in excludes):
+            return False, None, DenialReason.EXCLUDE_PATTERN
+        try:
+            context = parse_url(page_url)
+        except URLParseError:
+            return False, None, DenialReason.URL_PARSE_ERROR
+        if (
+            _is_internal(context, base)
+            and opts.allow_external_content_links
+            and not _is_external_main_page(url_str)
+        ):
+            return True, full_url, None
+        if (
+            opts.allow_subdomains
+            and not _is_social_media_or_email(url_str)
+            and _is_subdomain(url, base)
+        ):
+            return True, full_url, None
+        return False, None, DenialReason.EXTERNAL_LINK
+
+    return filter_href
+
+
 def filter_url(
     href: str,
     page_url: str,
@@ -329,53 +399,4 @@ def filter_url(
     file-type, include, or backward checks; internal excludes match the
     *path* regardless of regex_on_full_url; subdomain branch skips includes.
     """
-    full_url = href
-    if not href.startswith("http"):
-        try:
-            full_url = str(join_url(page_url, href))
-        except URLParseError:
-            return False, None, DenialReason.URL_PARSE_ERROR
-    try:
-        url = parse_url(full_url)
-        base = parse_url(opts.base_url)
-    except URLParseError:
-        return False, None, DenialReason.URL_PARSE_ERROR
-
-    path = url.path
-    url_str = str(url)
-    if _is_non_web_protocol(url_str):
-        return False, None, DenialReason.NON_WEB_PROTOCOL
-
-    excludes = _compile_patterns(opts.excludes)
-    robot = _build_robot(opts)
-
-    if _is_internal(url, base):
-        if not _no_sections(url_str):
-            return False, None, DenialReason.SECTION_LINK
-        if excludes and any(r.search(path) for r in excludes):
-            return False, None, DenialReason.EXCLUDE_PATTERN
-        if robot is not None and not robot.allowed(url_str):
-            return False, None, DenialReason.ROBOTS_TXT
-        return True, full_url, None
-
-    if _is_social_media_or_email(url_str):
-        return False, None, DenialReason.SOCIAL_MEDIA
-    if excludes and any(r.search(url_str) for r in excludes):
-        return False, None, DenialReason.EXCLUDE_PATTERN
-    try:
-        context = parse_url(page_url)
-    except URLParseError:
-        return False, None, DenialReason.URL_PARSE_ERROR
-    if (
-        _is_internal(context, base)
-        and opts.allow_external_content_links
-        and not _is_external_main_page(url_str)
-    ):
-        return True, full_url, None
-    if (
-        opts.allow_subdomains
-        and not _is_social_media_or_email(url_str)
-        and _is_subdomain(url, base)
-    ):
-        return True, full_url, None
-    return False, None, DenialReason.EXTERNAL_LINK
+    return url_filter(opts)(href, page_url)

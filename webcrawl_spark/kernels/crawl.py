@@ -9,7 +9,7 @@ from __future__ import annotations
 
 from urllib.parse import unquote
 
-from .classify import FilterOptions, filter_url
+from .classify import FilterOptions, url_filter
 from .htmlkit import extract_raw_links, parse_html
 from .urlkit import URLParseError, join_url
 
@@ -37,10 +37,11 @@ def _iframe_inline_htmls(html: str) -> list[str]:
 def page_links(html: str, page_url: str, opts: FilterOptions) -> list[str]:
     out: list[str] = []
     seen: set[str] = set()
+    filter_href = url_filter(opts)
 
     def collect(doc_html: str, depth: int) -> None:
         for href in extract_raw_links(doc_html):
-            ok, resolved, _ = filter_url(href, page_url, opts)
+            ok, resolved, _ = filter_href(href, page_url)
             if ok and resolved:
                 try:
                     normalized = str(join_url(page_url, resolved))

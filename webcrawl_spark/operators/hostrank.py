@@ -13,17 +13,17 @@ Scale shape (10^10-URL corpus → ~10^7-10^8 hosts):
 - ``host_link_edges`` explodes links once and aggregates to weighted
   host pairs — after the explode everything is hash-only host strings;
   page html never reaches the aggregation shuffle.
-- ``host_pagerank`` normalizes + caches the edge table once; each
-  iteration is ONE shuffle keyed on dst over the (small) rank table
-  joined against the cached edges. The dangling mass stays distributed
-  (1-row aggregate, broadcast cross-join — no per-iteration driver
-  collect), and ``localCheckpoint`` every ``checkpoint_every``
-  iterations truncates lineage so plan depth — and with it Catalyst
-  analysis time — stays O(checkpoint_every) instead of O(n_iter).
+- ``host_pagerank`` aggregates + caches the edge table once (the one
+  pass over the input lineage — with ``host_link_edges`` input, the HTML
+  parse); each iteration is ONE shuffle keyed on dst over the (small)
+  rank table joined against the cached edges. Every iteration is
+  ``localCheckpoint``ed, so plan depth — and with it Catalyst analysis
+  time — stays constant in n_iter, and the dangling mass is observed on
+  that materialization as a driver scalar (no per-iteration collect).
   MEASURED: analysis cost is superlinear in depth; per-iteration
-  truncation (the default) ran 10 iterations in 8.2 s vs 36.6 s at
-  cadence 5 on a 100k-edge graph (scripts/graph_probe.py) — the
-  checkpoint's ~n_hosts-row materialization is noise next to it.
+  truncation ran 10 iterations in 8.2 s vs 36.6 s at a cadence of 5 on
+  a 100k-edge graph (scripts/graph_probe.py) — the checkpoint's
+  ~n_hosts-row materialization is noise next to it.
 - ``host_rank_levels`` quantizes rank into small integer levels without
   a global window: cut points come from one driver-side approxQuantile
   (O(n_levels) driver memory), assignment is a pure Column expression.
@@ -88,22 +88,33 @@ def host_link_edges(pages: DataFrame, url_col: str = "url",
     )
 
 
+def _cached_edges(edges: DataFrame) -> tuple[DataFrame, int]:
+    """(src, dst, w) with duplicate pairs' weights summed, persisted, and
+    its row count: the ONE evaluation of the input lineage (with
+    host_link_edges input, a full HTML parse). Every later read — the
+    partition sizing, the edge caches, the host set — hits this cache."""
+    e = (edges.groupBy("src", "dst").agg(F.sum("weight").alias("w"))
+         .persist())
+    return e, e.count()
+
+
 def host_pagerank(edges: DataFrame, n_iter: int = 10,
-                  damping: float = 0.85,
-                  checkpoint_every: int = 1) -> DataFrame:
+                  damping: float = 0.85) -> DataFrame:
     """Weighted PageRank over (src, dst, weight) edges → (host, rank).
 
     rank_{t+1}(h) = (1-d)/N + d * (Σ_{e: e.dst=h} rank_t(e.src) *
     w(e)/out_w(e.src) + dangling_t/N), dangling_t = Σ rank_t over hosts
     with no out-edges. Fixed ``n_iter`` (no convergence test ⇒
     deterministic plan and oracle-replayable). Returns a lineage-free
-    (localCheckpoint'd) DataFrame; the internal edge cache is released
+    (localCheckpoint'd) DataFrame; the internal edge caches are released
     before returning.
     """
-    n_e = edges.count()
+    edges, n_e = _cached_edges(edges)
+    if n_e == 0:
+        edges.unpersist()
+        return edges.sparkSession.createDataFrame(
+            [], "host string, rank double")
     p_e = _edge_cache_partitions(edges, n_e)
-    edges = (edges.groupBy("src", "dst")
-             .agg(F.sum("weight").alias("w")))
     outw = edges.groupBy("src").agg(F.sum("w").alias("ow"))
     # partition the (big) edge table on the per-iteration join key ONCE:
     # every iteration's rank⋈edges join then reuses the cached layout and
@@ -126,64 +137,39 @@ def host_pagerank(edges: DataFrame, n_iter: int = 10,
              .repartition(p_e, "host")
              .persist())
     n = hosts.count()
-    if n == 0:
-        e_norm.unpersist()
-        hosts.unpersist()
-        return edges.sparkSession.createDataFrame(
-            [], "host string, rank double")
     ranks = hosts.withColumn("rank", F.lit(1.0 / n))
-    # dangling mass as a DRIVER SCALAR carried between iterations: with the
-    # per-iteration checkpoint (the default cadence), each iteration's mass
-    # is observed for free on the checkpoint materialization instead of a
-    # broadcast scalar subquery — which Spark executes as a SEPARATE pass
-    # over the rank table every iteration (no exchange reuse into scalar
-    # subqueries; the same effect doubles HITS's half-steps, see host_hits)
-    use_obs = checkpoint_every == 1
-    dm = None
-    if use_obs:
-        dm = float(ranks.filter(F.col("dang"))
-                   .agg(F.coalesce(F.sum("rank"), F.lit(0.0))).first()[0])
+    # dangling mass as a DRIVER SCALAR carried between iterations, observed
+    # for free on each iteration's checkpoint materialization — a broadcast
+    # scalar subquery instead would run as a SEPARATE pass over the rank
+    # table every iteration (no exchange reuse into scalar subqueries; the
+    # same effect doubles HITS's half-steps, see host_hits)
+    dm = float(ranks.filter(F.col("dang"))
+               .agg(F.coalesce(F.sum("rank"), F.lit(0.0))).first()[0])
     for i in range(n_iter):
         contrib = (ranks.join(e_norm, ranks["host"] == e_norm["src"])
                    .groupBy(F.col("dst").alias("host"))
                    .agg(F.sum(F.col("rank") * F.col("p")).alias("m")))
-        if use_obs:
-            new_ranks = (hosts.join(contrib, "host", "left")
-                         .select("host", "dang",
-                                 (F.lit((1.0 - damping) / n)
-                                  + F.lit(damping)
-                                  * (F.coalesce(F.col("m"), F.lit(0.0))
-                                     + F.lit(dm) / n)).alias("rank")))
-            if i + 1 < n_iter:
-                obs = Observation(f"pr_dang_{i}")
-                ranks = new_ranks.observe(
-                    obs,
-                    F.coalesce(F.sum(F.when(F.col("dang"), F.col("rank"))),
-                               F.lit(0.0)).alias("dm"),
-                ).localCheckpoint(eager=True)
-                dm = float(obs.get["dm"])
-            else:
-                ranks = new_ranks
-        else:
-            dang = (ranks.filter(F.col("dang"))
-                    .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm")))
-            ranks = (hosts.join(contrib, "host", "left")
-                     .crossJoin(F.broadcast(dang))
-                     .select("host", "dang",
-                             (F.lit((1.0 - damping) / n)
-                              + F.lit(damping)
-                              * (F.coalesce(F.col("m"), F.lit(0.0))
-                                 + F.col("dm") / n)).alias("rank")))
-            if (i + 1) % checkpoint_every == 0 and i + 1 < n_iter:
-                ranks = ranks.localCheckpoint(eager=True)
+        ranks = (hosts.join(contrib, "host", "left")
+                 .select("host", "dang",
+                         (F.lit((1.0 - damping) / n)
+                          + F.lit(damping)
+                          * (F.coalesce(F.col("m"), F.lit(0.0))
+                             + F.lit(dm) / n)).alias("rank")))
+        if i + 1 < n_iter:
+            obs = Observation(f"pr_dang_{i}")
+            ranks = ranks.observe(
+                obs,
+                F.coalesce(F.sum(F.when(F.col("dang"), F.col("rank"))),
+                           F.lit(0.0)).alias("dm"),
+            ).localCheckpoint(eager=True)
+            dm = float(obs.get["dm"])
     ranks = ranks.select("host", "rank").localCheckpoint(eager=True)
-    e_norm.unpersist()
-    hosts.unpersist()
+    for df in (edges, e_norm, hosts):
+        df.unpersist()
     return ranks
 
 
-def host_hits(edges: DataFrame, n_iter: int = 10,
-              checkpoint_every: int = 1) -> DataFrame:
+def host_hits(edges: DataFrame, n_iter: int = 10) -> DataFrame:
     """Weighted HITS over (src, dst, weight) edges → (host, hub, authority).
 
     Kleinberg's algorithm (JACM 1999), fixed ``n_iter`` mutual-
@@ -196,13 +182,16 @@ def host_hits(edges: DataFrame, n_iter: int = 10,
     are the link-list pages a crawler mines for discovery; authorities
     are what it wants ranked fetch-first.
 
-    Scale shape mirrors host_pagerank: the edge table is cached once;
-    each half-step is one shuffle keyed on the gathering side; the L2
-    norm is a 1-row aggregate broadcast back (no driver collect);
-    lineage is truncated by a final localCheckpoint."""
-    n_e = edges.count()
-    p_e = _edge_cache_partitions(edges, n_e)
-    e = edges.groupBy("src", "dst").agg(F.sum("weight").alias("w"))
+    Scale shape mirrors host_pagerank: the edge table is aggregated and
+    cached once; each half-step is one shuffle keyed on the gathering
+    side; every iteration is localCheckpoint'ed with its L2 norms
+    observed as driver scalars."""
+    e, n_e = _cached_edges(edges)
+    if n_e == 0:
+        e.unpersist()
+        return edges.sparkSession.createDataFrame(
+            [], "host string, hub double, authority double")
+    p_e = _edge_cache_partitions(e, n_e)
     # two cached copies, each partitioned on its half-step's join key, so
     # the per-iteration joins move only the (small) score tables — the
     # edge table is shuffled exactly twice for the whole run instead of
@@ -212,93 +201,49 @@ def host_hits(edges: DataFrame, n_iter: int = 10,
     hosts = (e.select(F.col("src").alias("host"))
              .union(e.select(F.col("dst").alias("host")))
              .distinct().repartition(p_e, "host").persist())
-    if hosts.count() == 0:
-        e_src.unpersist()
-        e_dst.unpersist()
-        hosts.unpersist()
-        return edges.sparkSession.createDataFrame(
-            [], "host string, hub double, authority double")
     scores = hosts.select("host", F.lit(1.0).alias("hub"),
                           F.lit(1.0).alias("authority"))
-    if checkpoint_every == 1:
-        # Default path: store the RAW half-step vectors and carry their L2
-        # norms as driver scalars observed on each iteration's checkpoint
-        # materialization. The L2 normalization is a scalar divide, so any
-        # positive multiple of the true vector normalizes to the same
-        # result — consumers divide by the stored vector's own observed
-        # norm and the scalar cancels exactly (fp rounding ~1e-15/step,
-        # six orders below the oracle's 1e-9 grid). This removes the two
-        # per-iteration norm scalar subqueries, each of which Spark
-        # executed as a SEPARATE full re-run of the half-step join+agg
-        # (scalar subqueries reuse no exchanges: the r5 shape computed
-        # every half-step twice).
-        hn = 1.0  # the original recurrence feeds the UNnormalized ones
-        an = 1.0
-        for i in range(n_iter):
-            auth = (scores.join(e_src, scores["host"] == e_src["src"])
-                    .groupBy(F.col("dst").alias("host"))
-                    .agg(F.sum((F.col("hub") / F.lit(hn)) * F.col("w"))
-                         .alias("a_raw")))
-            hub = (auth.join(e_dst, auth["host"] == e_dst["dst"])
-                   .groupBy(F.col("src").alias("host"))
-                   .agg(F.sum(F.col("a_raw") * F.col("w")).alias("h_raw")))
-            scores = (hosts.join(hub, "host", "left")
-                      .join(auth, "host", "left")
-                      .select("host",
-                              F.coalesce(F.col("h_raw"), F.lit(0.0))
-                              .alias("hub"),
-                              F.coalesce(F.col("a_raw"), F.lit(0.0))
-                              .alias("authority")))
-            obs = Observation(f"hits_norms_{i}")
-            scores = scores.observe(
-                obs,
-                F.sqrt(F.sum(F.col("hub") * F.col("hub"))).alias("hn"),
-                F.sqrt(F.sum(F.col("authority") * F.col("authority")))
-                .alias("an"),
-            ).localCheckpoint(eager=True)
-            m = obs.get
-            hn, an = float(m["hn"]), float(m["an"])
-        scores = scores.select(
-            "host", (F.col("hub") / F.lit(hn)).alias("hub"),
-            (F.col("authority") / F.lit(an)).alias("authority"),
-        ).localCheckpoint(eager=True)
-        e_src.unpersist()
-        e_dst.unpersist()
-        hosts.unpersist()
-        return scores
+    # Store the RAW half-step vectors and carry their L2 norms as driver
+    # scalars observed on each iteration's checkpoint materialization. The
+    # L2 normalization is a scalar divide, so any positive multiple of the
+    # true vector normalizes to the same result — consumers divide by the
+    # stored vector's own observed norm and the scalar cancels exactly (fp
+    # rounding ~1e-15/step, six orders below the oracle's 1e-9 grid). No
+    # per-iteration norm scalar subquery, each of which Spark would execute
+    # as a SEPARATE full re-run of the half-step join+agg (scalar
+    # subqueries reuse no exchanges).
+    hn = 1.0  # the original recurrence feeds the UNnormalized ones
+    an = 1.0
     for i in range(n_iter):
         auth = (scores.join(e_src, scores["host"] == e_src["src"])
                 .groupBy(F.col("dst").alias("host"))
-                .agg(F.sum(F.col("hub") * F.col("w")).alias("a_raw")))
-        a_norm = auth.agg(
-            F.sqrt(F.sum(F.col("a_raw") * F.col("a_raw"))).alias("nrm"))
-        auth = (auth.crossJoin(F.broadcast(a_norm))
-                .select("host", (F.col("a_raw") / F.col("nrm"))
-                        .alias("authority")))
+                .agg(F.sum((F.col("hub") / F.lit(hn)) * F.col("w"))
+                     .alias("a_raw")))
         hub = (auth.join(e_dst, auth["host"] == e_dst["dst"])
                .groupBy(F.col("src").alias("host"))
-               .agg(F.sum(F.col("authority") * F.col("w")).alias("h_raw")))
-        h_norm = hub.agg(
-            F.sqrt(F.sum(F.col("h_raw") * F.col("h_raw"))).alias("nrm"))
-        hub = (hub.crossJoin(F.broadcast(h_norm))
-               .select("host", (F.col("h_raw") / F.col("nrm"))
-                       .alias("hub")))
+               .agg(F.sum(F.col("a_raw") * F.col("w")).alias("h_raw")))
         scores = (hosts.join(hub, "host", "left")
                   .join(auth, "host", "left")
                   .select("host",
-                          F.coalesce(F.col("hub"), F.lit(0.0)).alias("hub"),
-                          F.coalesce(F.col("authority"), F.lit(0.0))
+                          F.coalesce(F.col("h_raw"), F.lit(0.0))
+                          .alias("hub"),
+                          F.coalesce(F.col("a_raw"), F.lit(0.0))
                           .alias("authority")))
-        # each iteration stacks 4 joins + 2 aggregates on BOTH score
-        # columns' lineage — twice host_pagerank's per-iteration depth, so
-        # the default truncates EVERY iteration (Catalyst analysis time
-        # goes superlinear in plan depth well before 10 iterations)
-        if (i + 1) % checkpoint_every == 0 and i + 1 < n_iter:
-            scores = scores.localCheckpoint(eager=True)
-    scores = scores.localCheckpoint(eager=True)
-    e_src.unpersist()
-    e_dst.unpersist()
-    hosts.unpersist()
+        obs = Observation(f"hits_norms_{i}")
+        scores = scores.observe(
+            obs,
+            F.sqrt(F.sum(F.col("hub") * F.col("hub"))).alias("hn"),
+            F.sqrt(F.sum(F.col("authority") * F.col("authority")))
+            .alias("an"),
+        ).localCheckpoint(eager=True)
+        m = obs.get
+        hn, an = float(m["hn"]), float(m["an"])
+    scores = scores.select(
+        "host", (F.col("hub") / F.lit(hn)).alias("hub"),
+        (F.col("authority") / F.lit(an)).alias("authority"),
+    ).localCheckpoint(eager=True)
+    for df in (e, e_src, e_dst, hosts):
+        df.unpersist()
     return scores
 
 

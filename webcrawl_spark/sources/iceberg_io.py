@@ -289,13 +289,10 @@ class IcebergTableIO:
         return None if row is None or row["r"] is None else int(row["r"])
 
     def read_rounds(self, table: str, after_round: int,
-                    upto_round: int | None = None,
-                    discover_partitions: bool = True) -> DataFrame | None:
+                    upto_round: int | None = None) -> DataFrame | None:
         """Incremental read (after_round, committed] — Iceberg's
         snapshot-range scan; the round partition predicate prunes to the
-        rounds in range. discover_partitions=False mirrors the parquet
-        reader's 'data columns only' mode: the injected round column is
-        dropped."""
+        rounds in range."""
         limit = self.committed_round() if upto_round is None else upto_round
         if not self._exists(table):
             return None
@@ -304,8 +301,6 @@ class IcebergTableIO:
             & (F.col("round") <= int(limit)))
         if df.limit(1).count() == 0:
             return None
-        if not discover_partitions and self._round_injected(table):
-            df = df.drop("round")
         return df
 
     # --- per-bucket file access (bucket-local seen-check) ----------------

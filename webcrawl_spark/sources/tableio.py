@@ -214,15 +214,11 @@ class TableIO:
         return rounds[-1][0] if rounds else None
 
     def read_rounds(self, table: str, after_round: int,
-                    upto_round: int | None = None,
-                    discover_partitions: bool = True) -> DataFrame | None:
+                    upto_round: int | None = None) -> DataFrame | None:
         """Incremental read: only rounds in (after_round, committed] — the
         TableIO stand-in for an Iceberg incremental snapshot-range scan.
         Listing and scan cost are O(rounds since after_round), independent of
-        total table history. None if no round in range has data.
-        discover_partitions=False skips basePath partition discovery (for
-        tables whose data already carries the needed columns — avoids the
-        round data-vs-partition column clash on crawl_result)."""
+        total table history. None if no round in range has data."""
         def has_parquet(path: str) -> bool:
             # a round with zero rows leaves a dir with no part files
             # (partitioned writes emit nothing) — unreadable, skip it
@@ -235,10 +231,8 @@ class TableIO:
                  if has_parquet(p)]
         if not paths:
             return None
-        reader = self.spark.read
-        if discover_partitions:
-            reader = reader.option("basePath", self._table_dir(table))
-        return reader.parquet(*paths)
+        return self.spark.read.option("basePath", self._table_dir(table)) \
+            .parquet(*paths)
 
     def read(self, table: str, upto_round: int | None = None) -> DataFrame:
         """Snapshot read: only committed rounds (or ≤ upto_round)."""
